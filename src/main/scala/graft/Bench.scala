@@ -1,47 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** Harness-main-only log hygiene: five deliberately single-partition
-    * windows (q90 group-count share, Zipf ≤topK rank, Metrics shard
-    * offsets, Normalize maxRefRows-guarded rank, Skew topN diagnostic)
-    * are all bounded by construction and `require`-guarded at their
-    * sites (see PLANS.md), but each still emits WindowExec's generic
-    * "No Partition Defined" WARN, making every bench/verify tail read
-    * dirtier than it is. Deny exactly THAT message via a RegexFilter on
-    * the WindowExec logger — NOT a level raise: a level raise would
-    * also swallow any FUTURE accidentally-unpartitioned window's
-    * warning in precisely the harness runs meant to surface it.
-    * Library code never touches log config, so any production session
-    * keeps the warning in full. */
-  def silenceKnownBoundedWindowWarn(): Unit = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.LoggerContext
-    import org.apache.logging.log4j.core.Filter
-    import org.apache.logging.log4j.core.config.LoggerConfig
-    import org.apache.logging.log4j.core.filter.RegexFilter
-    val name = "org.apache.spark.sql.execution.window.WindowExec"
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val cfg = ctx.getConfiguration
-    val filter = RegexFilter.createFilter(
-      ".*No Partition Defined for Window operation.*",
-      null, false, Filter.Result.DENY, Filter.Result.NEUTRAL)
-    val existing = cfg.getLoggers.get(name)
-    val lc =
-      if (existing != null) existing
-      else {
-        // additive logger config at the root level: everything else the
-        // logger emits still flows to the root appenders unchanged
-        val created = new LoggerConfig(name, Level.WARN, true)
-        cfg.addLogger(name, created)
-        created
-      }
-    lc.addFilter(filter)
-    ctx.updateLoggers()
-  }
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One bench run: the detail line (bench_detail.json and
+    * bench_history.jsonl), the stdout line, and the queries that threw,
+    * by error class. */
+  final case class Record(detail: String, stdout: String,
+      failed: Map[String, String])
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Per-query times are MEDIANS over `runs` full sweeps: a single
     // sequential pass lets one heavy query's GC/JIT land on its small
     // neighbors (2-3x apparent swings on untouched 0.5 s queries between
@@ -50,43 +19,55 @@ object Bench {
     // central value; the sweep order is identical across passes so
     // neighborhood effects are at least stable.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy-fixture compatibility: older events.parquet drops wrote
-      // TIMESTAMP(NANOS), readable only as an epoch-ns long; current
-      // drops write timestamp[us]. operators.EventTime dispatches on the
-      // actual type, so this conf is harmless-but-required dual support.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The 128-query run generates >100 distinct codegen classes; the
-      // default 100-entry cache evicts the MinHash-chain classes between
-      // q57 and q96, re-paying multi-second Janino compiles mid-run.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // AQE partition-coalescing floor (round 20, guide §2.2/§2.5): the
-      // default 1 MB minPartitionSize is a BYTE heuristic, but this
-      // engine's text/LSH stages cost 100-1000x their shuffle bytes in
-      // CPU (a 0.6 MB signature exchange feeds shingling + band hashing
-      // + pair verify), so byte-based coalescing collapsed them to ONE
-      // task while 31 cores idled — StageProfile r20: q157's verify
-      // chain ran as a single 1.7 s task. A smaller floor lets
-      // parallelismFirst actually use the cores; at production scale
-      // partitions are orders of magnitude above either floor, so the
-      // setting is a no-op there (scale-adaptive by construction).
-      // 256k is the measured sweet spot of a 1m/256k/128k/64k sweep
-      // (6-run warm medians, same box): q157 2.39→1.47→1.16→0.92 but
-      // the task-launch overhead inverts on short exchange-light
-      // queries below 256k (q42 0.49→0.45→0.49→0.62, q172
-      // 1.60→1.40→1.56→2.19), so 256k keeps the dense-stage win
-      // without a tail regression. Env-overridable so the driver's
-      // scaling sweep stays in control.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceKnownBoundedWindowWarn()
+    val spark = GraftSession.start()
+    val rec = run(spark, sfDir, SparkEntry.queries, runs,
+      GraftSession.aqeMinPartition, roundStamp(new java.io.File("."),
+        GraftSession.cpus))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_detail.json"), rec.detail.getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_history.jsonl"), rec.detail.getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    println(rec.stdout)
+    spark.stop()
+    // a failed query is reported in both records, never as a time, and
+    // fails the run
+    if (rec.failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Explicit ROUND marker (round 19, ADVICE r18 #1): bench_compare's
+    * same-file anchor mode equated "previous round" with "previous
+    * field-generation era", which breaks the first time a round adds no
+    * new Bench fields. The round number is derived, not hand-bumped:
+    * BENCH_r{N}.json is written at the END of round N's main bench
+    * run, and BENCH_r{N}_c{cpus}.json after the scaling re-run at other
+    * core counts that follows it. With M the highest N on disk,
+    * a scaling run at `cpus` whose BENCH_rM_c{cpus}.json is still
+    * missing belongs to round M; any other run (the next main run, a
+    * mid-round run) belongs to round M+1. Rev can't serve here (it
+    * changes per COMMIT — a round spans many). If no BENCH_r files are
+    * visible (run outside the repo root), the field is omitted and
+    * bench_compare falls back to era grouping — degraded, never
+    * wrong-era. */
+  def roundStamp(dir: java.io.File, cpus: String): Option[Int] = {
+    val names = Option(dir.list()).map(_.toSeq).getOrElse(Seq.empty)
+    val main = "^BENCH_r(\\d+)\\.json$".r
+    val scaled = s"^BENCH_r(\\d+)_c${java.util.regex.Pattern.quote(cpus)}\\.json$$".r
+    names.flatMap(main.findFirstMatchIn(_).map(_.group(1).toInt)).maxOption
+      .map { m =>
+        val scaledRounds =
+          names.flatMap(scaled.findFirstMatchIn(_).map(_.group(1).toInt))
+        if (scaledRounds.nonEmpty && !scaledRounds.contains(m)) m else m + 1
+      }
+  }
+
+  /** Calibrate, sweep `queries` `runs` times (plus two extra sweeps of
+    * the ten slowest) and build both records. A query that throws in
+    * any sweep is listed in `failed` and left out of every time field,
+    * median and the total. */
+  def run(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+      runs: Int, aqeMinPartition: String, round: Option[Int]): Record = {
     // Warm up the JVM / codegen / parquet reader paths once so timings
     // measure the queries, not first-query JIT+classloading (~4s).
     // The warmup doubles as an ENVIRONMENT CALIBRATION: its work is
@@ -108,11 +89,12 @@ object Bench {
         .groupBy("l_returnflag").count().collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val calibrationSec =
-      try {
-        calibrationRep() // cold: JIT + classloading, discarded
-        Vector.fill(3)(calibrationRep()).sorted.apply(1)
-      } catch { case _: Throwable => -1.0 }
+    // the median of 3 warm reps after a discarded cold one (JIT,
+    // classloading, the first real scan of the file); -1 if one throws
+    def warmMedian(rep: () => Double): Double =
+      try { rep(); Vector.fill(3)(rep()).sorted.apply(1) }
+      catch { case _: Throwable => -1.0 }
+    val calibrationSec = warmMedian(calibrationRep)
     // I/O-SENSITIVE calibration rep (round 17, VERDICT r16 #1): the
     // CPU-bound rep above is blind to page-cache / memory-bandwidth
     // pressure — the r16 driver record ran uniformly 1.24× slow
@@ -136,67 +118,44 @@ object Bench {
         .collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val ioCalibrationSec =
-      try {
-        ioCalibrationRep() // cold: first real scan of the file, discarded
-        Vector.fill(3)(ioCalibrationRep()).sorted.apply(1)
-      } catch { case _: Throwable => -1.0 }
-    val names = SparkEntry.queries.keys.toSeq
-    val samples = scala.collection.mutable.Map[String, Vector[Double]]()
+    val ioCalibrationSec = warmMedian(ioCalibrationRep)
+    // Every successful Sample per query, in sweep order. Besides the
+    // wall time each carries three process-wide counters:
+    //  - GC seconds: the recurring 3-6x worst-run spikes concentrate on
+    //    the components/verify chains, and without an attribution signal
+    //    a GC stall landing on a query is indistinguishable from a plan
+    //    regression. gc ≈ wall on a spiked sample says "collector, not
+    //    code"; gc ≈ 0 says look at the plan.
+    //  - Janino compile COUNT (the exact Counter, not the
+    //    reservoir-corruptible time histogram — see Sample.janino): a
+    //    WARM sample with compiles > 0 is direct evidence the codegen
+    //    cache evicted that query's classes mid-sweep (178 queries ×
+    //    multi-stage codegen vs the 2000-entry bound), which is the one
+    //    warm-tail mechanism wall+gc numbers cannot see (VERDICT r14
+    //    #1). BOUND (r15 census): 195 queries compile ~1390 classes on
+    //    sweep 1 against the 2000-entry codegen cache — if the board
+    //    grows past ~270 queries, re-run the janino_all_runs census
+    //    FIRST: eviction stops being a falsified hypothesis and becomes
+    //    arithmetic there.
+    //  - background-JIT ms (CompilationMXBean): the round-17 q101 census
+    //    showed warm samples swing 0.55–1.17 s while the C1/C2 threads
+    //    are still chewing (jit_ms 700–2800/run) and settle to
+    //    0.26–0.37 once they go quiet — the one second-order counter
+    //    that moved with the spikes after gc and janino both read zero
+    //    (VERDICT r16 #2). A flagged worst with high jit_ms says
+    //    "compiler contention", not plan.
+    val taken = scala.collection.mutable.Map[String, Vector[Sample]]()
       .withDefaultValue(Vector.empty)
-    // Per-sample JVM GC time (whole-process, seconds): the recurring
-    // 3-6x worst-run spikes concentrate on the components/verify chains,
-    // and without an attribution signal a GC stall landing on a query is
-    // indistinguishable from a plan regression. gc ≈ wall on a spiked
-    // sample says "collector, not code"; gc ≈ 0 says look at the plan.
-    val gcSamples = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-    // Per-sample Janino compile COUNT (the exact Counter, not the
-    // reservoir-corruptible time histogram — see TailProbe.janino):
-    // a WARM sample with compiles > 0 is direct evidence the codegen
-    // cache evicted that query's classes mid-sweep (178 queries ×
-    // multi-stage codegen vs the 2000-entry bound), which is the one
-    // warm-tail mechanism wall+gc numbers cannot see (VERDICT r14 #1).
-    // BOUND (r15 census): 195 queries compile ~1390 classes on sweep 1
-    // against the 2000-entry codegen cache — if the board grows past
-    // ~270 queries, re-run the janino_all_runs census FIRST: eviction
-    // stops being a falsified hypothesis and becomes arithmetic there.
-    val janinoSamples = scala.collection.mutable
-      .Map[String, Vector[Long]]().withDefaultValue(Vector.empty)
-    def janinoCount(): Long = org.apache.spark.metrics.source
-      .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // Per-sample background-JIT ms (CompilationMXBean, PROCESS-wide
-    // like gc): the round-17 q101 census showed warm samples swing
-    // 0.55–1.17 s while the C1/C2 threads are still chewing (jit_ms
-    // 700–2800/run) and settle to 0.26–0.37 once they go quiet — the
-    // one second-order counter that moved with the spikes after gc and
-    // janino both read zero (VERDICT r16 #2). A flagged worst with
-    // high jit_ms says "compiler contention", not plan.
-    val jitSamples = scala.collection.mutable
-      .Map[String, Vector[Long]]().withDefaultValue(Vector.empty)
-    def jitMillis(): Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime
-      else -1L
-    }
+    def samples(n: String): Vector[Double] = taken(n).map(_.seconds)
+    // query -> error class of its (first) throw; such a query has no
+    // time anywhere in the records
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     def runOnce(name: String): Unit = {
-      val g0 = gcMillis()
-      val j0 = janinoCount()
-      val jit0 = jitMillis()
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
-      gcSamples(name) = gcSamples(name) :+ (gcMillis() - g0) / 1e3
-      janinoSamples(name) = janinoSamples(name) :+ (janinoCount() - j0)
-      jitSamples(name) = jitSamples(name) :+
-        (if (jit0 < 0) -1L else jitMillis() - jit0)
+      val s = Sample.of(queries(name)(spark, sfDir))
+      s.failed match {
+        case Some(err) => if (!failed.contains(name)) failed(name) = err
+        case None => taken(name) = taken(name) :+ s
+      }
     }
     // One calibration rep INTERLEAVED after every sweep (VERDICT r14
     // #5): the machine's speed swung 0.41–0.64 within hours of one r14
@@ -217,7 +176,8 @@ object Bench {
       ioCalSweeps +=
         (try ioCalibrationRep() catch { case _: Throwable => -1.0 })
     }
-    for (_ <- 0 until runs) { names.foreach(runOnce); calSweepRep() }
+    for (_ <- 0 until runs) { queries.keys.foreach(runOnce); calSweepRep() }
+    def ok = queries.keys.toSeq.filterNot(failed.contains)
     def median(xs: Vector[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)
@@ -229,8 +189,9 @@ object Bench {
     // provisional median two extra sweeps: their medians become
     // 5-sample, everything else stays at `runs`.
     val extraRuns = 2
-    val top10 = names.sortBy(n => -median(samples(n))).take(10)
+    val top10 = ok.sortBy(n => -median(samples(n))).take(10)
     for (_ <- 0 until extraRuns) { top10.foreach(runOnce); calSweepRep() }
+    val names = ok // the queries that never threw
     val results = names.map(n => n -> median(samples(n)))
     val total = results.map(_._2).sum
     def fmt(v: Double) = f"$v%.3f"
@@ -239,19 +200,16 @@ object Bench {
     // 128-entry map overflows. bench_detail.json is the current round's
     // view; bench_history.jsonl is APPEND-ONLY so no round's per-query
     // detail is ever lost to an overwrite (the r05 detail was).
-    val detail = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val allRuns = names.map { n =>
-      "\"" + n + "\":[" + samples(n).map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val detail = Json.obj(names)(n => fmt(median(samples(n))))
+    val allRuns = Json.obj(names)(n => Json.arr(samples(n).map(fmt)))
     // Explicit [min, median, max] per query so a regression read is one
     // line (is the new median inside last round's spread?) instead of
     // all_runs archaeology.
-    val spreadAll = names.map { n =>
+    def spread(n: String): String = {
       val s = samples(n)
-      "\"" + n + "\":[" + fmt(s.min) + "," + fmt(median(s)) + "," +
-        fmt(s.max) + "]"
-    }.mkString("{", ",", "}")
+      Json.arr(Seq(s.min, median(s), s.max).map(fmt))
+    }
+    val spreadAll = Json.obj(names)(spread)
     // Tail-regression flag: worst WARM run / median > 3 AND
     // worst-median > 0.5 s (the absolute floor keeps 0.1 s queries from
     // flagging on scheduler jitter). WARM = samples after the first
@@ -282,26 +240,19 @@ object Bench {
     // arrays include it; the flag criterion does not).
     def flagEntry(n: String): String = {
       val (w, worstIdx) = warmWorst(n)
-      val gcWorst = gcSamples(n).lift(worstIdx).getOrElse(0.0)
-      val jnWorst = janinoSamples(n).lift(worstIdx).getOrElse(0L)
-      val jitWorst = jitSamples(n).lift(worstIdx).getOrElse(-1L)
-      "\"" + n + "\":{\"worst\":" + fmt(w) + ",\"median\":" +
+      val worst = taken(n)(worstIdx)
+      "{\"worst\":" + fmt(w) + ",\"median\":" +
         fmt(median(samples(n))) + ",\"cold\":" + fmt(samples(n).head) +
         ",\"gc_frac_worst\":" +
-        fmt(math.min(1.0, gcWorst / math.max(w, 1e-9))) +
-        ",\"janino_worst\":" + jnWorst +
-        ",\"jit_ms_worst\":" + jitWorst + "}"
+        fmt(math.min(1.0, worst.gcS / math.max(w, 1e-9))) +
+        ",\"janino_worst\":" + worst.janinoN +
+        ",\"jit_ms_worst\":" + worst.jitMs + "}"
     }
-    val spreadFlag = flagged.map(flagEntry).mkString("{", ",", "}")
-    val gcAll = names.map { n =>
-      "\"" + n + "\":[" + gcSamples(n).map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val janinoAll = names.map { n =>
-      "\"" + n + "\":[" + janinoSamples(n).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val jitAll = names.map { n =>
-      "\"" + n + "\":[" + jitSamples(n).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    val spreadFlag = Json.obj(flagged)(flagEntry)
+    def all(n: String)(f: Sample => String) = Json.arr(taken(n).map(f))
+    val gcAll = Json.obj(names)(all(_)(s => fmt(s.gcS)))
+    val janinoAll = Json.obj(names)(all(_)(_.janinoN.toString))
+    val jitAll = Json.obj(names)(all(_)(_.jitMs.toString))
     // "runs" is the BASE sweep count; the 10 provisionally-slowest
     // queries carry runs+top10_extra_runs samples (their all_runs arrays
     // are the ground truth for per-query sample counts).
@@ -328,8 +279,8 @@ object Bench {
     val ioStability =
       if (ioCalWarm.size >= 2) ioCalWarm.max / ioCalWarm.min else -1.0
     val calibrationStability = math.max(cpuStability, ioStability)
-    val calSweepsJson = calSweeps.map(fmt).mkString("[", ",", "]")
-    val ioCalSweepsJson = ioCalSweeps.map(fmt).mkString("[", ",", "]")
+    val calSweepsJson = Json.arr(calSweeps.toSeq.map(fmt))
+    val ioCalSweepsJson = Json.arr(ioCalSweeps.toSeq.map(fmt))
     // DECOUPLING check (round 18): the pre-run calibration block is
     // one-shot, so a transient (a just-exited JVM's residue, a host
     // blip) can make it measure a DIFFERENT machine than the run —
@@ -383,36 +334,19 @@ object Bench {
       r <- git("rev-parse", "--short", "HEAD")
       if r.matches("[0-9a-f]{4,40}")
     } yield r).getOrElse("unknown")
-    val revField = s""""rev":"$rev","""
-    // Explicit ROUND marker (round 19, ADVICE r18 #1): bench_compare's
-    // same-file anchor mode equated "previous round" with "previous
-    // field-generation era", which breaks the first time a round adds
-    // no new Bench fields — the old anchor would reach back a whole
-    // era. The round number is derived, not hand-bumped: the driver
-    // writes BENCH_r{N}.json at the END of round N's bench run, so at
-    // any round-N run (driver or mid-round) the highest N on disk is
-    // N-1. Rev can't serve here (it changes per COMMIT — a round spans
-    // many). If no BENCH_r files are visible (run outside the repo
-    // root), the field is omitted and bench_compare falls back to era
-    // grouping — degraded, never wrong-era.
-    val roundNo = scala.util.Try {
-      new java.io.File(".").listFiles.toSeq
-        .map(_.getName)
-        .flatMap { n =>
-          val m = "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(n)
-          m.map(_.group(1).toInt)
-        }
-        .maxOption.map(_ + 1)
-    }.toOption.flatten
-    val roundField = roundNo.map(n => s""""round":$n,""").getOrElse("")
+    val revField = s""""rev":${Json.str(rev)},"""
+    val roundField = round.map(n => s""""round":$n,""").getOrElse("")
     // Effective AQE coalescing floor (round 21, VERDICT r20 #8): the
     // driver's scaling sweep re-runs the bench at other core counts —
     // recording the floor lets a future sweep attribute mode changes
     // to it instead of guessing which env the record ran under.
-    val aqeFloorField = s""""aqe_min_partition":"${
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "256k")}","""
+    val aqeFloorField =
+      s""""aqe_min_partition":${Json.str(aqeMinPartition)},"""
+    // the queries that threw (query -> error class), in both lines
+    val failedField =
+      "\"failed\":" + Json.obj(failed.keys.toSeq)(k => Json.str(failed(k))) + ","
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      revField + roundField + aqeFloorField + decoupleFields +
+      revField + roundField + aqeFloorField + failedField + decoupleFields +
       s""""runs":$runs,"top10_extra_runs":$extraRuns,""" +
       s""""calibration_sec":${fmt(calibrationSecOut)},""" +
       s""""calibration_sweeps":$calSweepsJson,""" +
@@ -427,13 +361,7 @@ object Bench {
       s""""janino_all_runs":$janinoAll,""" +
       s""""jit_ms_all_runs":$jitAll,""" +
       s""""all_runs":$allRuns,""" +
-      s""""sf":"$sfDir","ts":${System.currentTimeMillis()}}""" + "\n"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_detail.json"), line.getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_history.jsonl"), line.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+      s""""sf":${Json.str(sfDir)},"ts":${System.currentTimeMillis()}}""" + "\n"
     // The stdout JSON line must fit, whole, inside the captured tail
     // (budget ~1800 chars after sbt's trailing "[success]" line), so it
     // carries the slowest queries only, greediest-first, plus the total.
@@ -441,11 +369,7 @@ object Bench {
     // Spread for the 10 slowest ([min, median, max]) rides in the stdout
     // line too — these are the queries whose medians move under
     // contention, so the spread is what tells a regression from noise.
-    val spreadTop = byTime.take(10).map { case (k, _) =>
-      val s = samples(k)
-      "\"" + k + "\":[" + fmt(s.min) + "," + fmt(median(s)) + "," +
-        fmt(s.max) + "]"
-    }.mkString("{", ",", "}")
+    val spreadTop = Json.obj(byTime.take(10).map(_._1))(spread)
     // stdout carries at most the 5 worst flagged queries (full set in
     // bench_detail.json) — and DROPS entries beyond what fits: with
     // several long-named flags the fixed fields alone could exceed the
@@ -456,7 +380,7 @@ object Bench {
     val flaggedBySeverity =
       flagged.sortBy(n => -(warmWorst(n)._1 / median(samples(n))))
     def flagTopStr(k: Int): String =
-      flaggedBySeverity.take(k).map(flagEntry).mkString("{", ",", "}")
+      Json.obj(flaggedBySeverity.take(k))(flagEntry)
     // The whole stdout line must fit the ~1800-char captured tail, so
     // the query-list budget is computed from what the VARIABLE fixed
     // fields (spread_top10, spread_flag) actually cost this run — a
@@ -464,8 +388,8 @@ object Bench {
     // queries tripped the flag.
     def stdoutLine(qs: String, ft: String): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        roundField + aqeFloorField +
-        s""""runs":$runs,"top10_extra_runs":$extraRuns,"calibration_sec":${fmt(calibrationSecOut)},"calibration_stability":${fmt(calibrationStability)},"cpu_stability":${fmt(cpuStability)},"io_stability":${fmt(ioStability)},"io_calibration_sec":${fmt(ioCalibrationSecOut)},"sweep1_total_sec":${fmt(sweep1Total)},"queries":$qs,"spread_top10":$spreadTop,"spread_flag":$ft,"n_queries":${results.size},"queries_are_slowest_first":true,"queries_are_medians":true,"detail":"bench_detail.json","history":"bench_history.jsonl","sf":"$sfDir"}"""
+        roundField + aqeFloorField + failedField +
+        s""""runs":$runs,"top10_extra_runs":$extraRuns,"calibration_sec":${fmt(calibrationSecOut)},"calibration_stability":${fmt(calibrationStability)},"cpu_stability":${fmt(cpuStability)},"io_stability":${fmt(ioStability)},"io_calibration_sec":${fmt(ioCalibrationSecOut)},"sweep1_total_sec":${fmt(sweep1Total)},"queries":$qs,"spread_top10":$spreadTop,"spread_flag":$ft,"n_queries":${results.size},"queries_are_slowest_first":true,"queries_are_medians":true,"detail":"bench_detail.json","history":"bench_history.jsonl","sf":${Json.str(sfDir)}}"""
     var nFlags = math.min(5, flaggedBySeverity.size)
     while (nFlags > 0 && stdoutLine("{}", flagTopStr(nFlags)).length > 1600)
       nFlags -= 1
@@ -474,10 +398,10 @@ object Bench {
     val kept = new scala.collection.mutable.ArrayBuffer[String]
     var used = 0
     byTime.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + fmt(v)
+      val entry = Json.str(k) + ":" + fmt(v)
       if (used + entry.length + 1 <= budget) { kept += entry; used += entry.length + 1 }
     }
-    println(stdoutLine(kept.mkString("{", ",", "}"), flagTop))
-    spark.stop()
+    Record(line, stdoutLine(kept.mkString("{", ",", "}"), flagTop),
+      failed.toMap)
   }
 }

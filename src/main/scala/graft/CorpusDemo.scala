@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.CorpusPipeline
 
 /** Runnable end-to-end training-corpus curation on the test data —
@@ -11,15 +10,7 @@ import graft.pipeline.CorpusPipeline
 object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     // round-8-late gates ON, with open-but-real bounds: latin-dominant
     // docs only, no Luhn-valid cards/emails/IPs, compression band wide

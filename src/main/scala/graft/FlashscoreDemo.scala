@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.FlashscorePipeline
 
 /** Runnable end-to-end demo of the reference workflow (SURVEY.md §3 E1):
@@ -36,14 +34,7 @@ object FlashscoreDemo {
       Seq(recJson("PSG", "3"), recJson("OM", "abandoned"))
         .mkString("[", ",", "]"))
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("flashscore-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     println(s"[demo] work dir: $work")
     FlashscorePipeline.runBatch(spark, in, s"$work/batch_out")

@@ -17,40 +17,35 @@ object PlanMetrics {
   final case class ShuffleSummary(
       exchanges: Int, shuffleBytes: Long, shuffleRecords: Long)
 
+  /** Every node of the executed (AQE-final) plan, walking into query
+    * stages and through reused exchanges. A node is listed once: an
+    * exchange reused across AQE stages appears once per consumer in the
+    * tree (wrapped in ReusedExchangeExec) but moves data exactly once,
+    * so it is counted by object identity and reuse-heavy plans aren't
+    * inflated. */
+  def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case other if seen.add(other) => other +: other.children.flatMap(walk)
+      case _ => Nil
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
   /** Execute `df` (full plan, nothing collected to the driver beyond
     * metric values) and sum shuffle-write metrics across all exchanges,
     * including those hidden inside AQE query stages. */
   def shuffleSummary(df: DataFrame): ShuffleSummary = {
-    val qe = df.queryExecution
-    qe.executedPlan.execute().foreach(_ => ()) // run to populate metrics
-    var exchanges = 0
-    var bytes = 0L
-    var records = 0L
-    // An exchange reused across AQE stages appears once per consumer in the
-    // tree (wrapped in ReusedExchangeExec) but moves data exactly once —
-    // count by object identity so reuse-heavy plans aren't inflated.
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def walk(p: SparkPlan): Unit = {
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case s: QueryStageExec => walk(s.plan)
-        case r: ReusedExchangeExec => walk(r.child)
-        case sh: ShuffleExchangeLike =>
-          if (seen.add(sh)) {
-            exchanges += 1
-            sh.metrics.get("shuffleBytesWritten")
-              .orElse(sh.metrics.get("bytesWritten"))
-              .foreach(m => bytes += m.value)
-            sh.metrics.get("shuffleRecordsWritten")
-              .orElse(sh.metrics.get("recordsWritten"))
-              .foreach(m => records += m.value)
-            sh.children.foreach(walk)
-          }
-        case other => other.children.foreach(walk)
-      }
-    }
-    walk(qe.executedPlan)
-    ShuffleSummary(exchanges, bytes, records)
+    df.queryExecution.executedPlan.execute().foreach(_ => ()) // run to populate metrics
+    val exchanges = executedNodes(df).collect { case sh: ShuffleExchangeLike => sh }
+    def total(names: String*): Long = exchanges.flatMap(sh =>
+      names.flatMap(sh.metrics.get).headOption.map(_.value)).sum
+    ShuffleSummary(exchanges.size,
+      total("shuffleBytesWritten", "bytesWritten"),
+      total("shuffleRecordsWritten", "recordsWritten"))
   }
 }

@@ -24,20 +24,8 @@ object ScaleProbe {
     * initial strategy exactly when the two differ. Walk the final tree
     * instead (the PlanMetrics traversal). */
   private def executedJoinKinds(df: DataFrame): String = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    var kinds = List.empty[String]
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
-      case r: ReusedExchangeExec => walk(r.child)
-      case other =>
-        val n = other.getClass.getSimpleName.stripSuffix("Exec")
-        if (n.contains("Join")) kinds ::= n
-        other.children.foreach(walk)
-    }
-    walk(df.queryExecution.executedPlan)
+    val kinds = PlanMetrics.executedNodes(df)
+      .map(_.getClass.getSimpleName.stripSuffix("Exec")).filter(_.contains("Join"))
     if (kinds.isEmpty) "none" else kinds.distinct.sorted.mkString("+")
   }
 
@@ -302,15 +290,7 @@ object ScaleProbe {
     // inside the repo checkout; "only=q150" was the first recurrence)
     val out = args.find(_.startsWith("/"))
       .getOrElse("/tmp/graft_sf1synth")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // the 10× synthesis always derives from the original fixtures (same
     // rows either way; keeps the synth dir independent of staging)
     if (!new java.io.File(s"$out/lineitem.parquet").exists())
@@ -329,6 +309,17 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).count()
       (System.nanoTime() - t0) / 1e9
+    }
+    // one x100 receipt line: wall from before construction (eager
+    // operators work there) through the executed plan's shuffle summary
+    def x100(label: String, extra: DataFrame => String = _ => "")(
+        build: => DataFrame): Unit = {
+      val t0 = System.nanoTime()
+      val df = build
+      val m = PlanMetrics.shuffleSummary(df)
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"x100,$label,$sec%.2f s,${m.shuffleRecords} shuffled rows," +
+        f"${m.shuffleBytes / 1024 / 1024} shuffled MiB" + extra(df))
     }
     // "caponly" arg skips the main table (re-measure just the q36 cap);
     // "only=<substr>[,<substr>...]" restricts the main table for fast
@@ -476,12 +467,7 @@ object ScaleProbe {
         // inside Graph.pagerank (cache + per-iteration checkpoint), so
         // construction IS the work; its shuffle summary reads ~0 (the
         // checkpoint-scan audit artifact documented in PLANS.md).
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, out100)
-        val m = PlanMetrics.shuffleSummary(df)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"x100,$name,$sec%.2f s,${m.shuffleRecords} shuffled rows," +
-          f"${m.shuffleBytes / 1024 / 1024} shuffled MiB")
+        x100(name)(SparkEntry.queries(name)(spark, out100))
       }
       // Round 16 (VERDICT r15 ask #2): third-decade receipts for the two
       // round-15 operators whose data-sized exchange hadn't been probed
@@ -515,14 +501,9 @@ object ScaleProbe {
               difficulty.as("__difficulty"))
             .withColumn("__row_id",
               col("l_orderkey") * 10 + col("l_linenumber"))
-          val t0 = System.nanoTime()
-          val df = graft.operators.Selection.curriculumSchedule(
-            li, "__row_id", "__difficulty", nBuckets = 10, seed = "r16")
-          val m = PlanMetrics.shuffleSummary(df)
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"x100,q187_${label}_curriculum,$sec%.2f s," +
-            f"${m.shuffleRecords} shuffled rows," +
-            f"${m.shuffleBytes / 1024 / 1024} shuffled MiB")
+          x100(s"q187_${label}_curriculum")(graft.operators.Selection
+            .curriculumSchedule(li, "__row_id", "__difficulty",
+              nBuckets = 10, seed = "r16"))
         }
       }
       // q190-shape: suppressToK's semi-join back on the QI key, at a QI
@@ -551,16 +532,10 @@ object ScaleProbe {
         import spark.implicits._
         val budgets = Seq(("A", 1.0e8), ("N", 1.0e8), ("R", 1.0e8))
           .toDF("source", "budget")
-        val t0 = System.nanoTime()
-        val df = graft.operators.Mixing
+        x100("q182_hotcut_general")(graft.operators.Mixing
           .selectWithinTokenBudgets(li, "source", "tok", budgets,
             "budget", Seq(graft.functions.PortableHash.md5Prefix(
-              col("id").cast("string"), 15), col("id")))
-        val m = PlanMetrics.shuffleSummary(df)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"x100,q182_hotcut_general,$sec%.2f s," +
-          f"${m.shuffleRecords} shuffled rows," +
-          f"${m.shuffleBytes / 1024 / 1024} shuffled MiB")
+              col("id").cast("string"), 15), col("id"))))
       }
       // Round 17 (VERDICT r16 ask #5): balanceClasses' big-minN WINDOW
       // arm — the last q187-class serial-rank site holding only a
@@ -576,13 +551,8 @@ object ScaleProbe {
         val li = spark.read.parquet(s"$out100/lineitem.parquet")
           .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
             col("l_returnflag").as("label"), col("l_quantity"))
-        val t0 = System.nanoTime()
-        val df = graft.operators.Sampling.balanceClasses(li, "id", "label")
-        val m = PlanMetrics.shuffleSummary(df)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"x100,qbalance_skewlabel,$sec%.2f s," +
-          f"${m.shuffleRecords} shuffled rows," +
-          f"${m.shuffleBytes / 1024 / 1024} shuffled MiB")
+        x100("qbalance_skewlabel")(
+          graft.operators.Sampling.balanceClasses(li, "id", "label"))
       }
       // Round 17 follow-through: quantileNormalize's CUR-side
       // per-source rank — the remaining q187-class window with only a
@@ -600,28 +570,16 @@ object ScaleProbe {
           .limit(500000)
           .select((col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
             col("l_extendedprice").cast("double").as("score"))
-        val t0 = System.nanoTime()
-        val df = graft.operators.Normalize.quantileNormalize(
-          li, ref, "id", "score", "source", k = 10)
-        val m = PlanMetrics.shuffleSummary(df)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"x100,qnorm_hotsrc,$sec%.2f s," +
-          f"${m.shuffleRecords} shuffled rows," +
-          f"${m.shuffleBytes / 1024 / 1024} shuffled MiB")
+        x100("qnorm_hotsrc")(graft.operators.Normalize.quantileNormalize(
+          li, ref, "id", "score", "source", k = 10))
       }
       if (explicitX100 && x100Sel("q190_semijoin")) {
         val li = spark.read.parquet(s"$out100/lineitem.parquet")
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_quantity"))
-        val t0 = System.nanoTime()
-        val df = graft.operators.Privacy.suppressToK(
-          li, Seq("l_orderkey", "l_returnflag"), k = 3)
-        val m = PlanMetrics.shuffleSummary(df)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"x100,q190_semijoin_highcard,$sec%.2f s," +
-          f"${m.shuffleRecords} shuffled rows," +
-          f"${m.shuffleBytes / 1024 / 1024} shuffled MiB," +
-          s"join=${executedJoinKinds(df)}")
+        x100("q190_semijoin_highcard", df => s",join=${executedJoinKinds(df)}")(
+          graft.operators.Privacy.suppressToK(
+            li, Seq("l_orderkey", "l_returnflag"), k = 3))
       }
     }
     spark.stop()

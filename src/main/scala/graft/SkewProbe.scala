@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
 
@@ -30,15 +29,9 @@ import graft.operators.Skew
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.start(GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "false") // no AQE skew rescue
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")) // force shuffle
     // key 0 owns 50% of all rows; the rest spread over 10k keys. The
     // value is hash-derived so the hot partition's shuffle blocks don't
     // compress to nothing — skew DETECTION (AQE's and any operator's)

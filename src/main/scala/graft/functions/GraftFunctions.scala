@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftshim.Shims
   * Column API.
   *
   * Two entry points:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions(...)`
+  *  - [[GraftExtensions]] for a session builder's `withExtensions(...)`
   *    (or `spark.sql.extensions=graft.functions.GraftExtensions`);
   *  - [[GraftFunctions.registerAll]] for an already-running session.
   */

@@ -249,9 +249,10 @@ object Selection {
     * aggregates plus the broadcast scoring pass — once per consumer.
     * The scored frame itself is corpus-cardinal but only 3 columns
     * (id, n_grams, log_w), so materializing it once is cheaper than one
-    * chain re-run: measured at sf0.1 (graft.SelectSampleAB, 5 warm
-    * reps, alternating order), select+sample off this frame is 0.60× of
-    * the re-run form (2.78 → 1.68 s median) with identical answers.
+    * chain re-run: measured at sf0.1 (SCALING.md, "q183's
+    * select-and-sample scorer reuse": 5 warm reps, alternating order),
+    * select+sample off this frame is 0.60× of the re-run form
+    * (2.78 → 1.68 s median) with identical answers.
     *
     * `localCheckpoint` is the single-JVM/bench form (blocks live on the
     * executors that computed them — lost if an executor dies); on a
