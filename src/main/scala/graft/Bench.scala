@@ -241,12 +241,11 @@ object Bench {
     def flagEntry(n: String): String = {
       val (w, worstIdx) = warmWorst(n)
       val worst = taken(n)(worstIdx)
-      "{\"worst\":" + fmt(w) + ",\"median\":" +
-        fmt(median(samples(n))) + ",\"cold\":" + fmt(samples(n).head) +
-        ",\"gc_frac_worst\":" +
-        fmt(math.min(1.0, worst.gcS / math.max(w, 1e-9))) +
-        ",\"janino_worst\":" + worst.janinoN +
-        ",\"jit_ms_worst\":" + worst.jitMs + "}"
+      Json.fields(Seq("worst" -> fmt(w), "median" -> fmt(median(samples(n))),
+        "cold" -> fmt(samples(n).head),
+        "gc_frac_worst" -> fmt(math.min(1.0, worst.gcS / math.max(w, 1e-9))),
+        "janino_worst" -> worst.janinoN.toString,
+        "jit_ms_worst" -> worst.jitMs.toString))
     }
     val spreadFlag = Json.obj(flagged)(flagEntry)
     def all(n: String)(f: Sample => String) = Json.arr(taken(n).map(f))
@@ -299,11 +298,10 @@ object Bench {
     val ioCalDecoupled = decoupled(ioCalibrationSec, ioCalWarm.toSeq)
     val calibrationSecOut = if (calDecoupled) -1.0 else calibrationSec
     val ioCalibrationSecOut = if (ioCalDecoupled) -1.0 else ioCalibrationSec
-    val decoupleFields =
-      (if (calDecoupled)
-        s""""calibration_sec_raw":${fmt(calibrationSec)},""" else "") +
-      (if (ioCalDecoupled)
-        s""""io_calibration_sec_raw":${fmt(ioCalibrationSec)},""" else "")
+    val decoupleFields = Seq(
+      Option.when(calDecoupled)("calibration_sec_raw" -> fmt(calibrationSec)),
+      Option.when(ioCalDecoupled)(
+        "io_calibration_sec_raw" -> fmt(ioCalibrationSec))).flatten
     // Code revision stamp (round 18, ADVICE r17): bench_compare's
     // sweep1 gate can't distinguish "machine under pressure" from
     // "code got slower" on its own — the rev lets its warn path say
@@ -334,34 +332,34 @@ object Bench {
       r <- git("rev-parse", "--short", "HEAD")
       if r.matches("[0-9a-f]{4,40}")
     } yield r).getOrElse("unknown")
-    val revField = s""""rev":${Json.str(rev)},"""
-    val roundField = round.map(n => s""""round":$n,""").getOrElse("")
+    // Both lines are ordered field lists rendered by Json.fields; the
+    // key set, key order and number formats are a driver contract.
+    val totalFields = Seq("metric" -> Json.str("total"),
+      "value" -> fmt(total), "unit" -> Json.str("sec"))
     // Effective AQE coalescing floor (round 21, VERDICT r20 #8): the
     // driver's scaling sweep re-runs the bench at other core counts —
     // recording the floor lets a future sweep attribute mode changes
-    // to it instead of guessing which env the record ran under.
-    val aqeFloorField =
-      s""""aqe_min_partition":${Json.str(aqeMinPartition)},"""
-    // the queries that threw (query -> error class), in both lines
-    val failedField =
-      "\"failed\":" + Json.obj(failed.keys.toSeq)(k => Json.str(failed(k))) + ","
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      revField + roundField + aqeFloorField + failedField + decoupleFields +
-      s""""runs":$runs,"top10_extra_runs":$extraRuns,""" +
-      s""""calibration_sec":${fmt(calibrationSecOut)},""" +
-      s""""calibration_sweeps":$calSweepsJson,""" +
-      s""""calibration_stability":${fmt(calibrationStability)},""" +
-      s""""cpu_stability":${fmt(cpuStability)},""" +
-      s""""io_stability":${fmt(ioStability)},""" +
-      s""""io_calibration_sec":${fmt(ioCalibrationSecOut)},""" +
-      s""""io_calibration_sweeps":$ioCalSweepsJson,""" +
-      s""""sweep1_total_sec":${fmt(sweep1Total)},""" +
-      s""""queries":$detail,"spread":$spreadAll,""" +
-      s""""spread_flag":$spreadFlag,"gc_all_runs":$gcAll,""" +
-      s""""janino_all_runs":$janinoAll,""" +
-      s""""jit_ms_all_runs":$jitAll,""" +
-      s""""all_runs":$allRuns,""" +
-      s""""sf":${Json.str(sfDir)},"ts":${System.currentTimeMillis()}}""" + "\n"
+    // to it instead of guessing which env the record ran under. Then
+    // the queries that threw (query -> error class).
+    val common = round.map(n => "round" -> n.toString).toSeq ++ Seq(
+      "aqe_min_partition" -> Json.str(aqeMinPartition),
+      "failed" -> Json.obj(failed.keys.toSeq)(k => Json.str(failed(k))))
+    val runFields = Seq("runs" -> runs.toString,
+      "top10_extra_runs" -> extraRuns.toString)
+    val line = Json.fields(totalFields ++ Seq("rev" -> Json.str(rev)) ++
+      common ++ decoupleFields ++ runFields ++ Seq(
+      "calibration_sec" -> fmt(calibrationSecOut),
+      "calibration_sweeps" -> calSweepsJson,
+      "calibration_stability" -> fmt(calibrationStability),
+      "cpu_stability" -> fmt(cpuStability), "io_stability" -> fmt(ioStability),
+      "io_calibration_sec" -> fmt(ioCalibrationSecOut),
+      "io_calibration_sweeps" -> ioCalSweepsJson,
+      "sweep1_total_sec" -> fmt(sweep1Total),
+      "queries" -> detail, "spread" -> spreadAll,
+      "spread_flag" -> spreadFlag, "gc_all_runs" -> gcAll,
+      "janino_all_runs" -> janinoAll, "jit_ms_all_runs" -> jitAll,
+      "all_runs" -> allRuns, "sf" -> Json.str(sfDir),
+      "ts" -> System.currentTimeMillis().toString)) + "\n"
     // The stdout JSON line must fit, whole, inside the captured tail
     // (budget ~1800 chars after sbt's trailing "[success]" line), so it
     // carries the slowest queries only, greediest-first, plus the total.
@@ -386,22 +384,31 @@ object Bench {
     // fields (spread_top10, spread_flag) actually cost this run — a
     // constant budget overflowed the tail on rounds where several
     // queries tripped the flag.
-    def stdoutLine(qs: String, ft: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-        roundField + aqeFloorField + failedField +
-        s""""runs":$runs,"top10_extra_runs":$extraRuns,"calibration_sec":${fmt(calibrationSecOut)},"calibration_stability":${fmt(calibrationStability)},"cpu_stability":${fmt(cpuStability)},"io_stability":${fmt(ioStability)},"io_calibration_sec":${fmt(ioCalibrationSecOut)},"sweep1_total_sec":${fmt(sweep1Total)},"queries":$qs,"spread_top10":$spreadTop,"spread_flag":$ft,"n_queries":${results.size},"queries_are_slowest_first":true,"queries_are_medians":true,"detail":"bench_detail.json","history":"bench_history.jsonl","sf":${Json.str(sfDir)}}"""
+    def stdoutLine(qs: Seq[(String, String)], ft: String): String =
+      Json.fields(totalFields ++ common ++ runFields ++ Seq(
+        "calibration_sec" -> fmt(calibrationSecOut),
+        "calibration_stability" -> fmt(calibrationStability),
+        "cpu_stability" -> fmt(cpuStability),
+        "io_stability" -> fmt(ioStability),
+        "io_calibration_sec" -> fmt(ioCalibrationSecOut),
+        "sweep1_total_sec" -> fmt(sweep1Total), "queries" -> Json.fields(qs),
+        "spread_top10" -> spreadTop, "spread_flag" -> ft,
+        "n_queries" -> results.size.toString,
+        "queries_are_slowest_first" -> "true", "queries_are_medians" -> "true",
+        "detail" -> Json.str("bench_detail.json"),
+        "history" -> Json.str("bench_history.jsonl"), "sf" -> Json.str(sfDir)))
     var nFlags = math.min(5, flaggedBySeverity.size)
-    while (nFlags > 0 && stdoutLine("{}", flagTopStr(nFlags)).length > 1600)
+    while (nFlags > 0 && stdoutLine(Nil, flagTopStr(nFlags)).length > 1600)
       nFlags -= 1
     val flagTop = flagTopStr(nFlags)
-    val budget = 1750 - stdoutLine("{}", flagTop).length
-    val kept = new scala.collection.mutable.ArrayBuffer[String]
+    val budget = 1750 - stdoutLine(Nil, flagTop).length
+    // each kept query costs its `"name":median` entry plus one separator
+    val kept = new scala.collection.mutable.ArrayBuffer[(String, String)]
     var used = 0
     byTime.foreach { case (k, v) =>
-      val entry = Json.str(k) + ":" + fmt(v)
-      if (used + entry.length + 1 <= budget) { kept += entry; used += entry.length + 1 }
+      val cost = Json.str(k).length + 1 + fmt(v).length + 1
+      if (used + cost <= budget) { kept += (k -> fmt(v)); used += cost }
     }
-    Record(line, stdoutLine(kept.mkString("{", ",", "}"), flagTop),
-      failed.toMap)
+    Record(line, stdoutLine(kept.toSeq, flagTop), failed.toMap)
   }
 }

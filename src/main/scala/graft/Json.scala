@@ -16,10 +16,14 @@ object Json {
     case c => c.toString
   } + "\""
 
-  /** `{"k1":v1,...}` over `keys` in order: keys escaped, each value
+  /** `{"k1":v1,...}` over the fields in order: keys escaped, each value
     * already JSON. */
+  def fields(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** [[fields]] over `keys`, each value computed from its key. */
   def obj(keys: Seq[String])(value: String => String): String =
-    keys.map(k => str(k) + ":" + value(k)).mkString("{", ",", "}")
+    fields(keys.map(k => k -> value(k)))
 
   def arr(values: Seq[String]): String = values.mkString("[", ",", "]")
 }

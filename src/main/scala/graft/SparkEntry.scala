@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF, UrlFunctions, VectorFunctions => VF}
 import graft.operators.{Boilerplate, Bpe, C4Clean, ClusterEval,
   Collocations, Decontaminate, Dedup, Drift, EventTime, Fuzzy,
-  GopherRules, LangModel, Metrics, Mixing, Normalize, PartialAgg,
+  GopherRules, LangModel, Metrics, Mixing, Normalize, PartialAgg, Pin,
   Privacy, RepeatedSpans, Retrieval, Sampling, Scoring, Selection,
   Similarity, Zipf}
 
@@ -5693,8 +5693,8 @@ object SparkEntry {
       // deduped corpus. Every stage is an individually-green operator
       // (q167/q171/q156/q148 families); this verifies their
       // COMPOSITION, where real pipelines break. One chain execution
-      // feeds both the curve and the dedup (localCheckpointed pair
-      // frame); the curve collect is |thresholds| rows.
+      // feeds both the curve and the dedup (pinned pair frame); the
+      // curve collect is |thresholds| rows.
       graft.operators.Curation.curationReport(
         t(s, dir, "documents"), "doc_id", "text", "source", "n_chars",
         thresholds = Seq(0.7, 0.8, 0.9, 0.95), maxAffectedDocs = 46L,
@@ -6437,16 +6437,14 @@ object SparkEntry {
       // budget both need tokenCount(text), and composing the operators
       // lazily ran that corpus pass twice. Both operators take frames,
       // so the share needs no operator specialization: pin the narrow
-      // (source, id, n_chars, ntok) base once and feed it to both;
-      // materializeMixture skips its own now-redundant pin
-      // (pinBase = false). ntok keeps tokenCount's nullability (null
-      // text → null ntok) so the reweight's null-loss algebra and the
-      // cut's coalesce-to-0 behave exactly as before — values
-      // bit-identical, oracle unchanged.
+      // (source, id, n_chars, ntok) base once and feed it to both
+      // (materializeMixture never pins). ntok keeps tokenCount's
+      // nullability (null text → null ntok) so the reweight's null-loss
+      // algebra and the cut's coalesce-to-0 behave exactly as before —
+      // values bit-identical, oracle unchanged.
       val docs = t(s, dir, "documents")
-      val base = docs.select(col("source"), col("doc_id"), col("n_chars"),
-          TF.tokenCount(col("text")).cast("bigint").as("__ntok"))
-        .localCheckpoint()
+      val base = Pin(docs.select(col("source"), col("doc_id"),
+        col("n_chars"), TF.tokenCount(col("text")).cast("bigint").as("__ntok")))
       val lnq = (c: Column) => log(c).cast("decimal(24,10)")
       val alphas = Mixing.doremiReweight(base, "source",
           lnq(col("n_chars") + 1),
@@ -6455,7 +6453,7 @@ object SparkEntry {
         .select(col("source"), col("alpha").as("weight"))
       Mixing.materializeMixture(base, "source", "doc_id",
         col("__ntok"),
-        alphas, budget = 13000L, maxEpochs = 0.5, pinBase = false)
+        alphas, budget = 13000L, maxEpochs = 0.5)
     },
     Some("""WITH tk AS (
       |  SELECT doc_id, source, n_chars,

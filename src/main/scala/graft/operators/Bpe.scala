@@ -28,9 +28,8 @@ import graft.functions.{TextFunctions => TF}
   *   - Pair counting is map-side (slice + zip_with over the symbol
   *     array), so each iteration costs one vocab-sized partial-agg
   *     shuffle of (left, right, Σn) plus a 1-row collect of the winner.
-  *   - Lineage is truncated per iteration (localCheckpoint by default;
-  *     `checkpointDir` switches to reliable checkpoints for long cluster
-  *     runs — the Graph.pagerank pattern).
+  *   - Lineage is truncated per iteration by a [[Pin]] (see its
+  *     contract — the Graph.pagerank pattern).
   *   - A driver-local arm (`localVocabThreshold`) runs the identical
   *     algorithm over a collected vocab when it is small — the
   *     Dedup.connectedComponents hybrid gate. Both arms are
@@ -80,12 +79,10 @@ object Bpe {
       docs: DataFrame,
       textCol: String,
       numMerges: Int,
-      localVocabThreshold: Long = 2000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      localVocabThreshold: Long = 2000000L): DataFrame = {
     val spark = docs.sparkSession
     val vocab0 = wordCounts(docs, textCol)
       .select(renderWord(col("word")).as("s"), col("n"))
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
 
     val vocabSize = vocab0.count()
     val merges =
@@ -93,7 +90,7 @@ object Bpe {
         learnLocal(vocab0.collect().map(r =>
           (r.getString(0), r.getLong(1))), numMerges)
       else
-        learnDistributed(vocab0, numMerges, checkpointDir.isDefined)
+        learnDistributed(vocab0, numMerges)
 
     val schema = StructType(Seq(
       StructField("rank", IntegerType, nullable = false),
@@ -160,11 +157,8 @@ object Bpe {
     * merge loop is vocabulary-bounded, measured flat at 10× corpus. */
   private def learnDistributed(
       vocab0: DataFrame,
-      numMerges: Int,
-      reliable: Boolean): Seq[(String, String, Long)] = {
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    var vocab = truncate(vocab0)
+      numMerges: Int): Seq[(String, String, Long)] = {
+    var vocab = Pin(vocab0)
     val out = mutable.ArrayBuffer.empty[(String, String, Long)]
     var k = 0
     while (k < numMerges) {
@@ -183,7 +177,7 @@ object Bpe {
       val w = winners.head
       val (l, r, c) = (w.getString(0), w.getString(1), w.getLong(2))
       out += ((l, r, c))
-      vocab = truncate(vocab.withColumn("s",
+      vocab = Pin(vocab.withColumn("s",
         replace(col("s"), lit(s"|$l |$r "), lit(s"|$l$r "))))
       k += 1
     }

@@ -23,10 +23,9 @@ object Curation {
     *  1. ONE portable MinHash-LSH chain execution at min(thresholds)
     *     produces the verified pair frame; the tuning curve
     *     ([[Dedup.sweepOverPairs]]) and the dedup both read it — the
-    *     pair frame is `localCheckpoint`ed (LSH-candidate-bounded, so
-    *     executor-storage-sized; lineage-truncated blocks are
-    *     reclaimed by the ContextCleaner once the frame is
-    *     unreferenced) so the chain never runs twice.
+    *     pair frame is a [[Pin]] (LSH-candidate-bounded; eager, see its
+    *     contract; blocks are reclaimed by the ContextCleaner once the
+    *     frame is unreferenced) so the chain never runs twice.
     *  2. Operating point: the SMALLEST threshold whose affected-doc
     *     count fits `maxAffectedDocs` (dedup as aggressively as the
     *     removal budget allows), falling back to max(thresholds) when
@@ -85,9 +84,9 @@ object Curation {
     // plain chains inverted here (A/B 2.06 → 2.49 s med; the same
     // inversion this query showed in the AQE-floor sweep), so the
     // sweep keeps the AQE-coalescible distinct
-    val pairs = Dedup.portableNearDups(docs, idCol, textCol,
+    val pairs = Pin(Dedup.portableNearDups(docs, idCol, textCol,
       numHashes, bands, shingleSize, ts.head, seed,
-      pinVerifyFanout = false).localCheckpoint()
+      pinVerifyFanout = false))
     // stage 2: smallest threshold within the removal budget, else the
     // most conservative one — as a ONE-ROW broadcast frame, not a
     // driver collect (round 21, the pagerank nTot recipe): the old

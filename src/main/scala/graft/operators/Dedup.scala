@@ -1089,27 +1089,15 @@ object Dedup {
     * operator never collects an unbounded set. Both paths compute the
     * identical fixpoint (DedupSpec cross-checks them on random graphs).
     *
-    * `checkpointDir` hardens the distributed loop for long cluster runs:
-    * None (default) caches each round's labels — recoverable (Spark
-    * recomputes lost cache partitions from lineage) but plan depth grows
-    * by one join per round. A reliable directory (HDFS/object store)
-    * instead CHECKPOINTS each round, truncating lineage so a
-    * high-diameter graph (many rounds) can't accumulate a recompute
-    * cliff behind a lost executor. Both arms compute the identical
-    * fixpoint (DedupSpec asserts equality).
+    * The distributed loop pins each round's labels with [[Pin]] (see
+    * its contract), so plan depth stays one join per round however many
+    * rounds a high-diameter graph needs.
     *
     * @return (idCol, component) — component = min id reachable.
     */
   def connectedComponents(
       pairs: DataFrame, maxIterations: Int = 10,
-      localEdgeThreshold: Long = 1000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // per-round label materialization: reliable checkpoint on a cluster
-    // (lineage-truncating), cache locally (lineage-preserving)
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.cache()
+      localEdgeThreshold: Long = 1000000L): DataFrame = {
     // Materialize the pair list ONCE before fanning it out: the symmetric
     // edge union below references it 4 times, and `pairs` is typically
     // the output of an expensive chain (LSH candidates + verify) that
@@ -1129,14 +1117,13 @@ object Dedup {
       .union(fwd.select(col("dst").as("src"), col("dst")))
       .distinct()
       .cache()
-    var labels = materialize(edges.groupBy(col("src"))
+    var labels = Pin(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("component")))
     // Convergence check without a join: labels under min-propagation are
     // monotone NONINCREASING per node (self-loops keep the own label in
     // every neighborhood min), so the label-sum strictly decreases until
-    // the fixpoint. One tiny aggregate per round — it doubles as the
-    // action that materializes the round's cache — replaces the
-    // next-vs-previous join+filter, halving the jobs per iteration.
+    // the fixpoint. One tiny aggregate per round over the pinned labels
+    // replaces the next-vs-previous join+filter.
     def labelSig(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)), sum(col("component").cast("decimal(28,0)")))
         .head()
@@ -1147,13 +1134,12 @@ object Dedup {
     var converged = false
     while (iter < maxIterations && !converged) {
       // propagate: node label = min(own label, neighbors' labels)
-      val next = materialize(edges
+      val next = Pin(edges
         .join(labels.withColumnRenamed("src", "dst")
           .withColumnRenamed("component", "__nbr"), Seq("dst"))
         .groupBy(col("src"))
         .agg(min(col("__nbr")).as("component")))
       val nextSig = labelSig(next)
-      labels.unpersist()
       labels = next
       converged = nextSig == sig
       sig = nextSig

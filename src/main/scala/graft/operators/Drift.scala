@@ -193,11 +193,11 @@ object Drift {
     * Scale shape: one corpus-sized token aggregate for the global
     * counts (map-combines to vocab), a TakeOrdered top-K cut
     * (k-bounded), then the per-(source, symbol) aggregate — map-combined
-    * to sources × (K+1) rows and localCheckpointed (bounded, three
-    * consumers — see the inline note) — against which everything else
-    * is broadcast joins and (sources × (K+1))-row windows. Exactly TWO
-    * corpus token passes; nothing wider than sources × (K+1) shuffles
-    * after them.
+    * to sources × (K+1) rows and pinned (bounded, three consumers — see
+    * the inline note; eager, see [[Pin]]'s contract) — against which
+    * everything else is broadcast joins and (sources × (K+1))-row
+    * windows. Exactly TWO corpus token passes; nothing wider than
+    * sources × (K+1) shuffles after them.
     * Float discipline is [[psi]]'s: exact-integer ratios, ln through
     * DECIMAL(24,10), per-cell terms decimal-summed. */
   def unigramDivergence(
@@ -218,13 +218,12 @@ object Drift {
     // THREE consumers (global marginals, the source list, the join
     // back); exchange reuse does not dedupe them — their pruned
     // subtrees differ pre-AQE, and PlanAudit measured the corpus
-    // explode running twice. localCheckpoint materializes the tiny
-    // frame once (the q172 pattern for bounded multi-consumer
-    // intermediates), so the whole query is exactly TWO corpus token
-    // passes: the vocab count and this aggregate.
-    val bySrcSym = mapped.groupBy(col("src"), col("sym"))
-      .agg(count(lit(1)).as("n_ss"))
-      .localCheckpoint()
+    // explode running twice. The pin materializes the tiny frame once
+    // (the q172 pattern for bounded multi-consumer intermediates), so
+    // the whole query is exactly TWO corpus token passes: the vocab
+    // count and this aggregate.
+    val bySrcSym = Pin(mapped.groupBy(col("src"), col("sym"))
+      .agg(count(lit(1)).as("n_ss")))
     val all = Window.partitionBy(lit(1))
     // global per-symbol counts + the grand total, attached on the
     // (K+1)-row symbol frame (a window over support-sized rows)

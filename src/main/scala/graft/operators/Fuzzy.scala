@@ -32,13 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Fuzzy {
 
-  /** Eager pin for a multi-consumer corpus frame (the round-21 set-frame
-    * materialization — see the jaccardSelfJoin note). Streaming frames
-    * cannot checkpoint; they pass through lazy (micro-batches are small
-    * by construction, same guard as Dedup.fanOutNarrowScan). */
-  private def pinned(df: DataFrame): DataFrame =
-    if (df.isStreaming) df else df.localCheckpoint()
-
   /** All unordered pairs of distinct values of `strCol` within Levenshtein
     * distance `k`, as (name_a, name_b, dist) with name_a < name_b.
     *
@@ -119,6 +112,8 @@ object Fuzzy {
     * Set elements must be NON-NULL (the shingle producers guarantee it):
     * a null element would vanish at the prefix equi-join (null keys never
     * match) while still counting in the verify's set sizes.
+    *
+    * Eager: both set frames are built through [[Pin]] (see its contract).
     */
   def jaccardJoin(
       left: DataFrame, right: DataFrame,
@@ -132,9 +127,9 @@ object Fuzzy {
     // verify (2 corpus passes), r those plus the prefix carve (3) — the
     // same multi-consumer tokenize recompute as the self-join form,
     // same §1.2/§8 trade (see jaccardSelfJoin's pin note).
-    val l = pinned(left.select(col(idCol).as("id_a"),
+    val l = Pin(left.select(col(idCol).as("id_a"),
       array_sort(array_distinct(col(setCol))).as("__set_a")))
-    val r = pinned(right.select(col(idCol).as("id_b"),
+    val r = Pin(right.select(col(idCol).as("id_b"),
       array_sort(array_distinct(col(setCol))).as("__set_b")))
 
     // global token order: (df over both sides, token) — any consistent
@@ -181,6 +176,9 @@ object Fuzzy {
     * fan-out added measured constants (~2× at sf0.1, round-11 q121) to
     * an arm that gains nothing from it, so it rides plain
     * ENSURE_REQUIREMENTS aggregation instead.
+    *
+    * Eager: the corpus set frame is built through [[Pin]] (see its
+    * contract).
     */
   def jaccardSelfJoin(
       sets: DataFrame, idCol: String, setCol: String,
@@ -218,11 +216,9 @@ object Fuzzy {
     // the §8 "fingerprint once" recipe; at 100 TB the pinned frame is
     // token-scale but each avoided pass is a full corpus re-scan AND
     // re-tokenize, strictly more I/O + CPU than reading the blocks
-    // back. localCheckpoint is the single-JVM/bench medium per the
-    // module convention (cluster callers trading fault tolerance swap
-    // .checkpoint()). Answers unchanged: same frame content, different
-    // physical source.
-    val r = pinned(sets.select(col(idCol).as("id_b"),
+    // back. Answers unchanged: same frame content, different physical
+    // source.
+    val r = Pin(sets.select(col(idCol).as("id_b"),
       array_sort(array_distinct(col(setCol))).as("__set_b")))
     // whole-corpus rarity: map-side-combined frequency aggregate (left
     // docs are a subset of r, so counting r once is the single-corpus df)
@@ -300,7 +296,10 @@ object Fuzzy {
     * token; hot (frequent) tokens never enter the join unless they sit
     * in someone's RARITY prefix, which by construction they rarely do.
     * `maxPairsPerDoc` caps each id_a's partners best-first via the
-    * heap exec, same contract as [[jaccardSelfJoin]]'s cap. */
+    * heap exec, same contract as [[jaccardSelfJoin]]'s cap.
+    *
+    * Eager: the corpus set frame is built through [[Pin]] (see its
+    * contract). */
   def containmentSelfJoin(
       sets: DataFrame, idCol: String, setCol: String,
       threshold: Double, leftPred: Column,
@@ -310,18 +309,21 @@ object Fuzzy {
     val selectiveSlice = !isStaticallyTrue(sets, leftPred)
     // corpus set frame pinned — THREE consumers here (frequency
     // aggregate, flat postings, verify); same trade as jaccardSelfJoin
-    val r = pinned(sets.select(col(idCol).as("id_b"),
+    val r = Pin(sets.select(col(idCol).as("id_b"),
       array_sort(array_distinct(col(setCol))).as("__set_b")))
     val tokenDf = r.select(explode(col("__set_b")).as("__t"))
       .groupBy(col("__t"))
       .agg(count(lit(1)).as("__df"))
     // query-side rarity prefix (same pinned carve as the jaccard form);
-    // the slice filter lands BEFORE the carve — unlike the jaccard
-    // self-join there is no shared corpus prefix table to carve out of,
-    // so filtering first pushes the predicate into the scan
-    val lBase = if (selectiveSlice) sets.filter(leftPred) else sets
-    val lSets = lBase.select(col(idCol).as("id_a"),
-      array_sort(array_distinct(col(setCol))).as("__set_a"))
+    // a selective slice filters BEFORE the set build — unlike the
+    // jaccard self-join there is no shared corpus prefix table to carve
+    // out of, so filtering first pushes the predicate into the scan.
+    // The whole corpus is the pinned r renamed: no second tokenize pass.
+    val lSets =
+      if (selectiveSlice)
+        sets.filter(leftPred).select(col(idCol).as("id_a"),
+          array_sort(array_distinct(col(setCol))).as("__set_a"))
+      else r.select(col("id_b").as("id_a"), col("__set_b").as("__set_a"))
     val lp = prefixes(lSets, "id_a", "__set_a", tokenDf, threshold,
       pinFanout = selectiveSlice)
     // corpus-side FLAT postings: no carve — (id_b, n_b, token)
@@ -338,7 +340,7 @@ object Fuzzy {
       if (selectiveSlice) candBase.repartition(numPart, col("id_b")).distinct()
       else candBase.distinct()
     // exact directed verify: |a ∩ b| / |a| — the id_a side re-reads only
-    // the SLICE (its filter pushes to the scan), never the whole corpus
+    // the slice (its filter pushes to the scan) or the pin
     candidates
       .join(r, Seq("id_b"))
       .join(lSets, Seq("id_a"))

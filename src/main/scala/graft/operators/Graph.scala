@@ -41,11 +41,14 @@ object Graph {
     * rounds of a longer period fuse into one job (the rank recurrence
     * is linear — an untruncated stretch re-derives nothing). Ranks are
     * bit-identical for any period; the final frame is always
-    * materialized so the invariant caches can be released. */
+    * materialized so the invariant caches can be released.
+    *
+    * Eager: every truncation is a [[Pin]] (see its contract — on a
+    * cluster, the session's checkpoint directory makes the loop survive
+    * executor loss). */
   def pagerank(
       edges: DataFrame, iterations: Int = 3,
       damping: Double = 0.85,
-      checkpointDir: Option[String] = None,
       truncateEvery: Int = 1): DataFrame = {
     require(truncateEvery >= 1, "truncateEvery must be >= 1")
     // Loop invariants are CACHED for the duration of training and the
@@ -58,18 +61,7 @@ object Graph {
     // before returning, and the returned frame reads the final
     // checkpoint, not the raw lineage.
     //
-    // `checkpointDir` picks the truncation medium: None (default) uses
-    // localCheckpoint — executor-local blocks, fastest, right for
-    // local[n] and short-lived jobs, but NOT fault-tolerant (a lost
-    // executor loses the truncated lineage and kills the job). On a real
-    // multi-node cluster pass a reliable directory (HDFS/object store):
-    // iterations then survive executor loss at the cost of one
-    // write+read of the rank frame (2 small columns) per iteration.
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() // reliable, eager
-      else df.localCheckpoint() // eager: materializes + truncates lineage
-    // e and eo are EAGER (localCheckpoint), not lazy caches (round 20):
+    // e and eo are EAGER pins, not lazy caches (round 20):
     // the fused chain's one action referenced the unfilled e-cache from
     // several concurrently-materializing subtrees (eo's edge side, eo's
     // outdeg aggregate, the nodes union), and concurrent AQE stages
@@ -78,13 +70,8 @@ object Graph {
     // THREE times, 62 s of 100 s total task time, two-thirds wasted.
     // Eager materialization sequences the fills (e once, then eo once —
     // whose build also fills the nodes cache through nTot), so every
-    // later consumer reads blocks. The truncation medium follows the
-    // caller's `checkpointDir` via `truncate` (round 21, ADVICE r20):
-    // hardcoded localCheckpoint here contradicted the parameter's
-    // fault-tolerance contract — a lost localCheckpoint block is
-    // unrecoverable, so pagerank invoked WITH a reliable dir would
-    // still have died on executor loss mid-loop.
-    val e = truncate(edges.select(col("src"), col("dst")).distinct())
+    // later consumer reads blocks.
+    val e = Pin(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().cache()
     // Node total as a ONE-ROW broadcast frame, not a driver collect
@@ -103,7 +90,7 @@ object Graph {
     // joining it inside the loop would re-pay a join per iteration. The
     // one-row node total rides along so per-iteration arithmetic needs
     // no extra broadcast join inside the loop.
-    val eo = truncate(e.join(
+    val eo = Pin(e.join(
         e.groupBy(col("src")).agg(count(lit(1)).as("__odeg")), Seq("src"))
       .crossJoin(broadcast(nTot)))
     // Iteration state is the DST-KEYED MASS frame, not the node-wide
@@ -138,8 +125,8 @@ object Graph {
       // The mass chain is LINEAR (mass_i feeds exactly one mass_{i+1}),
       // so an untruncated stretch re-derives nothing — its cost is plan
       // DEPTH, not recompute. Truncation is therefore periodic: each
-      // eager (local)checkpoint is a full Spark ACTION (AQE planning,
-      // job scheduling, block writes) whose fixed cost dominates short
+      // eager pin is a full Spark ACTION (AQE planning, job scheduling,
+      // block writes) whose fixed cost dominates short
       // iterations on fast clusters, while depth must stay bounded on
       // long runs (analyzer/optimizer walks grow with the chain and the
       // lineage must fit the driver). truncateEvery=1 keeps the classic
@@ -148,7 +135,7 @@ object Graph {
       // Mid-chain cuts happen on the mass frame (in-degree-set-sized,
       // 2 columns — strictly smaller than the node-wide rank frame).
       mass = if (iter < iterations && iter % truncateEvery == 0)
-        truncate(next)
+        Pin(next)
       else next
     }
     // One node-wide pass at the end reconstructs pr for every node,
@@ -160,17 +147,17 @@ object Graph {
         // truncated like every other exit (round 21, VERDICT r20 minor):
         // the caches are released below, so an untruncated frame would
         // re-derive the just-unpersisted nodes on first use
-        truncate(nodes.crossJoin(broadcast(nTot))
+        Pin(nodes.crossJoin(broadcast(nTot))
           .select(col("id"), (lit(1.0) / col("__n")).as("pr")))
-      else truncate(
+      else Pin(
         nodes.join(mass, Seq("id"), "left")
           .crossJoin(broadcast(nTot))
           .select(col("id"),
             ((lit(1.0 - damping) / col("__n")) +
               lit(damping) * coalesce(col("__mass"), lit(0.0)))
               .as("pr")))
-    // e/eo are checkpoint-backed now (blocks release on RDD GC, like
-    // the per-iteration truncations); only the nodes cache needs an
+    // e/eo are pins (blocks release on RDD GC, like the per-iteration
+    // truncations); only the nodes cache needs an
     // explicit release
     nodes.unpersist()
     pr

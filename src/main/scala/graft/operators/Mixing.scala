@@ -300,57 +300,38 @@ object Mixing {
     * call site below) — the serial running sum is not the bottleneck.
     * Everything else is |sources|-sized.
     *
-    * EAGER AT CONSTRUCTION when `pinBase` (noted per ADVICE r20):
-    * building the returned frame materializes the (source, id, tok)
-    * base — the corpus tokenize runs even if the caller never acts on
-    * the result — and the pin truncates the observe node out of the
-    * returned lineage, so `null_id_rows_dropped` fires at pin time
-    * only (read it from the ObservedLog listener, not the consuming
-    * action's observedMetrics). */
+    * LAZY, and never pins: the (source, id, tok) base has two
+    * corpus-pass consumers (the per-source aggregate and the ordered
+    * cut), so a caller whose `tokens` is expensive pins a narrow
+    * `docs` itself with [[Pin]] and passes it in — q182 shares one
+    * pinned tokenized base between the doremi reweight and this cut.
+    * `null_id_rows_dropped` is observed on the lazy base, which the
+    * plan instantiates in several subtrees: it fires once per
+    * consuming action, possibly as several emissions to the
+    * ObservedLog listener (the last one wins). */
   def materializeMixture(
       docs: DataFrame, sourceCol: String, idCol: String,
       tokens: org.apache.spark.sql.Column, weights: DataFrame,
-      budget: Long, maxEpochs: Double,
-      pinBase: Boolean = true): DataFrame = {
+      budget: Long, maxEpochs: Double): DataFrame = {
     ObservedLog.ensure(docs.sparkSession)
     val n = mixingMetricSeq.incrementAndGet()
     // a doc with a NULL token count costs zero (kept for free) — the
     // alternative leaks layout-dependence: a null-costed doc sitting
     // FIRST in a source's order makes the running sum NULL and the
-    // filter silently drop it, while the same doc later rides along
-    // The base (source, id, tok) frame is pinned ONCE (round 20, guide
-    // §1.2 "unavoidable passes"): it has two corpus-pass consumers —
-    // the per-source aggregate and the ordered greedy cut — and left
-    // lazy each re-evaluated `tokens` over the whole corpus (the
-    // tokenize is the expensive part; StageProfile r20 showed two
-    // ~equal tokenize stages). The pinned frame is 3 narrow columns,
-    // strictly smaller than the docs it derives from; the checkpoint
-    // also subsumes the old perSrc checkpoint (below), so the action
-    // count is unchanged. localCheckpoint is the single-JVM/bench
-    // medium per the module convention; cluster callers trading
-    // fault-tolerance differently swap `.checkpoint()`.
-    // `pinBase = false` (round 21): a caller whose `docs` is ALREADY a
-    // pinned narrow frame (q182 shares one tokenized base between the
-    // doremi reweight and this cut) skips the second materialization —
-    // the checkpoint would copy blocks to blocks; the two corpus-pass
-    // consumers below then read the caller's pin. Callers passing a
-    // lazy corpus frame must keep the default or the token expression
-    // re-runs per consumer.
-    val baseLazy = docs.select(col(sourceCol).as("source"),
+    // filter silently drop it, while the same doc later rides along.
+    val base = docs.select(col(sourceCol).as("source"),
         col(idCol).as("__id"),
         coalesce(tokens.cast("bigint"), lit(0L)).as("__tok"))
       .observe(s"graft.mixing.materialize.$n",
         sum(when(col("__id").isNull, 1L).otherwise(0L))
           .as("null_id_rows_dropped"))
       .filter(col("__id").isNotNull)
-    val base = if (pinBase) baseLazy.localCheckpoint() else baseLazy
-    // perSrc's own localCheckpoint is GONE (round 20): its two
-    // consumers still prune opposite columns (the waterfill reads
-    // n_tokens, the report join reads n_docs — structurally different
-    // aggregate subtrees, no ReusedExchange, the r16 4-scans receipt),
-    // but both copies now re-aggregate the PINNED base, a narrow
-    // checkpoint-block scan instead of a corpus tokenize pass, so the
-    // second copy costs a bounded aggregate rather than a full pass.
+    // perSrc is not pinned (round 20): its two consumers prune opposite
+    // columns (the waterfill reads n_tokens, the report join reads
+    // n_docs — structurally different aggregate subtrees, no
+    // ReusedExchange, the r16 4-scans receipt), but over a caller's
+    // pinned narrow base the second copy costs a bounded aggregate of
+    // checkpoint blocks rather than a corpus tokenize pass.
     val perSrc = base.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("__tok")).as("n_tokens"))
     // FULL outer against the plan's weights: a doc-source the weights

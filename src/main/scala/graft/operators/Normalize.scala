@@ -31,9 +31,7 @@ import org.apache.spark.sql.types.NumericType
   * count always runs at call time, as does the per-source count (the
   * arm cutover) for numeric scores; the salted arm adds the quantile
   * sketch and the bounded
-  * histogram's localCheckpoint (the [[Selection.curriculumSchedule]]
-  * caveat: single-JVM block residency — cluster callers wanting
-  * resilience swap the checkpoint for reliable storage).
+  * histogram's [[Pin]] (see its contract).
   *
   * Non-numeric scores (string, date, timestamp — any orderable type):
   * the rank and the reference grid order them exactly like the plain
@@ -157,7 +155,7 @@ object Normalize {
     // (ties cannot split across salts without breaking the id
     // tie-order) — quantize-then-curriculum is the tool there. The
     // (source, salt) histogram is map-combined with |sources| × 64-
-    // bounded output, localCheckpointed for its two bounded consumers
+    // bounded output, pinned for its two bounded consumers
     // (offsets + per-source totals — the q187 fusion precedent). The
     // join back keys on a NON-NULL source surrogate ("v"-prefix,
     // null → "" — the tieExpr recipe) so the planner may still
@@ -224,10 +222,9 @@ object Normalize {
         else when(col(scoreCol).isNull, lit(0)).otherwise(
           edges.map(e => when(col(scoreCol) >= lit(e), 1).otherwise(0))
             .reduce(_ + _))
-      val hist = cur
+      val hist = Pin(cur
         .groupBy(skey.as("__sk"), saltCol.as("__salt"))
-        .agg(count(lit(1)).as("__hc"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("__hc")))
       val offW = Window.partitionBy(col("__sk")).orderBy(col("__salt"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val totW = Window.partitionBy(col("__sk"))

@@ -60,14 +60,8 @@ object RaterAgreement {
     * plan, so the planner's ReusedExchange serves them from one
     * shuffle (the q163 pattern).
     *
-    * EAGER AT CONSTRUCTION (round 20 pins; noted per ADVICE r20):
-    * building the returned frame materializes the contingency and
-    * per-item frames via localCheckpoint — full corpus jobs run even
-    * if the caller never acts on the result — and the checkpoint
-    * truncates the observe node out of the returned lineage, so the
-    * `null_rows_dropped` metric fires at PIN time only (a consuming
-    * action's queryExecution.observedMetrics sees nothing; read it
-    * from the ObservedLog listener instead).
+    * Eager: the contingency and per-item frames are [[Pin]]s (see its
+    * contract — `null_rows_dropped` fires at pin time).
     */
   def fleissKappa(
       df: DataFrame, itemCol: String, categoryCol: String): DataFrame = {
@@ -90,19 +84,15 @@ object RaterAgreement {
     // own scale contract ("contingency-bounded": ≤ one row per distinct
     // (item, category) pair, 3 narrow columns), so materializing it
     // once is strictly cheaper than one recompute of its corpus pass.
-    // localCheckpoint is the single-JVM/bench medium; long-running
-    // cluster callers swap `.checkpoint()`/DISK_ONLY per the module
-    // convention. The pin also retires the tautological
+    // The pin also retires the tautological
     // reference-the-column tricks this chain previously needed.
-    val ct = nullDropped.groupBy(col("item"), col("cat"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val ct = Pin(nullDropped.groupBy(col("item"), col("cat"))
+      .agg(count(lit(1)).as("n")))
     // per-item: rating count m_i and Σ_j n_ij² (exact longs) — pinned
     // for the same reason (three consumers: modal, kept, all-items)
-    val perItem = ct.groupBy(col("item"))
+    val perItem = Pin(ct.groupBy(col("item"))
       .agg(sum(col("n")).as("m"),
-        sum(col("n") * col("n")).as("sum_sq"))
-      .localCheckpoint()
+        sum(col("n") * col("n")).as("sum_sq")))
     // modal m: aggregate the (m → item count) frame (rater-count-
     // bounded — one row per distinct panel size) and keep the mode,
     // ties to the larger m for determinism.
@@ -176,8 +166,8 @@ object RaterAgreement {
     * order (doubles would not be). Category marginals n_c square in
     * DECIMAL(38,0) — n is a corpus-scale count.
     *
-    * EAGER AT CONSTRUCTION, pin-time-only observe metric — same
-    * round-20 contingency pins and caveats as [[fleissKappa]].
+    * Eager: the contingency frames are [[Pin]]s, as in [[fleissKappa]]
+    * (see its contract — `null_rows_dropped` fires at pin time).
     */
   def krippendorffAlpha(
       df: DataFrame, itemCol: String, categoryCol: String): DataFrame = {
@@ -192,15 +182,13 @@ object RaterAgreement {
     // both contingency frames PINNED — same pruning-fragile-reuse
     // rationale and receipts as fleissKappa above (ct: per-item roll-up
     // + marginal join; perItem: the disagreement fold + the pairable-
-    // item keep list), same bench/cluster medium note
-    val ct = rows.groupBy(col("item"), col("cat"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    val perItem = ct.groupBy(col("item"))
+    // item keep list)
+    val ct = Pin(rows.groupBy(col("item"), col("cat"))
+      .agg(count(lit(1)).as("n")))
+    val perItem = Pin(ct.groupBy(col("item"))
       .agg(sum(col("n")).as("m"),
         sum(col("n") * col("n")).as("sum_sq"))
-      .filter(col("m") >= 2)
-      .localCheckpoint()
+      .filter(col("m") >= 2))
     // observed-disagreement fold: per-item rational term → exact decimal
     val obs = perItem.agg(
       count(lit(1)).as("n_items"),

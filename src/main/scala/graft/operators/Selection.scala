@@ -155,25 +155,21 @@ object Selection {
     * bit-identical to the per-occurrence form; SelectionSpec pins
     * parity). The pinned frame is |docs| × min(B, doc grams) narrow
     * rows — strictly smaller than the gram-occurrence flow it replaces.
-    * `localCheckpoint` is the single-JVM/bench medium (the
-    * importanceWeightsShared contract); a long-running cluster caller
-    * trading fault-tolerance differently can swap `.checkpoint()` in.
     * Only the raw side shares — the target pass stays its own (usually
-    * tiny) aggregate.
+    * tiny) aggregate. A job that both selects on and samples from the
+    * scores pins the returned frame with [[Pin]]: measured 0.60× of
+    * re-running the chain per consumer (SCALING.md round 16); a single
+    * consumer should not.
     *
-    * EAGER AT CONSTRUCTION (noted per ADVICE r20): building the
-    * returned frame materializes the per-(doc, bucket) count frame —
-    * the corpus gram pass runs even if the caller never acts on the
-    * result. */
+    * Eager: the count frame is a [[Pin]] (see its contract). */
   def importanceWeights(
       raw: DataFrame, target: DataFrame, idCol: String, textCol: String,
       numBuckets: Int = 1024): DataFrame = {
     require(numBuckets > 0, "numBuckets must be positive")
-    val db = gramRows(raw, idCol, textCol, outer = true)
+    val db = Pin(gramRows(raw, idCol, textCol, outer = true)
       .withColumn("__b", bucket(col("__gram"), numBuckets))
       .groupBy(col(idCol), col("__b"))
-      .agg(count(col("__gram")).as("__cnt"))
-      .localCheckpoint()
+      .agg(count(col("__gram")).as("__cnt")))
     // Σ_doc cnt per bucket = the raw occurrence count; the zero-gram
     // docs' (null bucket, 0) group is dropped by the dense range join
     // inside ratiosFromCounts exactly as outer=false dropped their rows
@@ -241,32 +237,6 @@ object Selection {
         // both sides (the q173 floor-ppm lesson, round flavor).
         round(col("__sum_lr"), 6).cast("double").as("log_w"))
   }
-
-  /** [[importanceWeights]] MATERIALIZED for multi-consumer jobs: when a
-    * caller both SELECTS on the scores (keep log_w above a threshold)
-    * and SAMPLES from them ([[gumbelTopK]]) in one job, the lazy scored
-    * frame re-executes the whole scoring chain — two gram-explode
-    * aggregates plus the broadcast scoring pass — once per consumer.
-    * The scored frame itself is corpus-cardinal but only 3 columns
-    * (id, n_grams, log_w), so materializing it once is cheaper than one
-    * chain re-run: measured at sf0.1 (SCALING.md, "q183's
-    * select-and-sample scorer reuse": 5 warm reps, alternating order),
-    * select+sample off this frame is 0.60× of the re-run form
-    * (2.78 → 1.68 s median) with identical answers.
-    *
-    * `localCheckpoint` is the single-JVM/bench form (blocks live on the
-    * executors that computed them — lost if an executor dies); on a
-    * long-running cluster job prefer `.checkpoint()` (reliable storage)
-    * or `.persist(DISK_ONLY)` with the same sharing effect. A caller
-    * with ONE consumer (q179's report, q183's sample alone) should NOT
-    * use this — the chain runs once there and the checkpoint write is
-    * pure overhead. The caller owns the returned frame's lifecycle
-    * (`.unpersist()` when done). */
-  def importanceWeightsShared(
-      raw: DataFrame, target: DataFrame, idCol: String, textCol: String,
-      numBuckets: Int = 1024): DataFrame =
-    importanceWeights(raw, target, idCol, textCol, numBuckets)
-      .localCheckpoint(true)
 
   /** DSIR's SAMPLING step, deterministic: Gumbel top-k over a score
     * column. Sampling k items with probability ∝ exp(score) is exactly
@@ -345,17 +315,8 @@ object Selection {
     * (e.g. round the loss to 3 decimals): curriculum semantics only
     * need ordinal tiers, never raw-float resolution.
     *
-    * EAGER + single-JVM materialization caveat (same contract as
-    * [[importanceWeightsShared]]): the bounded value-level histogram is
-    * pinned with `localCheckpoint()`, which is EAGER — constructing the
-    * plan runs one full corpus aggregate even if the caller never
-    * executes the result — and whose blocks live only on the executors
-    * that computed them: an executor loss (dynamic allocation,
-    * preemption) on a real cluster fails the query instead of
-    * recomputing. This is the single-JVM/bench form; a long-running
-    * cluster caller should swap it for reliable `.checkpoint()` or
-    * `.persist(DISK_ONLY)` — the frame is ≤ |distinct scores| × 64
-    * rows, so either costs next to nothing there.
+    * Eager: the bounded value-level histogram (≤ |distinct scores| × 64
+    * rows) is a [[Pin]] (see its contract).
     *
     * Output: (idCol, scoreCol, tier 1-based, position 0-based). Position
     * is unique (position ≡ tier−1 mod nBuckets) and sorting by it yields
@@ -381,15 +342,13 @@ object Selection {
     // review: the first draft ran a groupBy(score) CDF pass AND a
     // groupBy(score, salt) histogram pass — two corpus scans where one
     // suffices). hist is |distinct scores| × 64 rows (bounded by the
-    // documented low-cardinality precondition); localCheckpoint pins
-    // the single computation for its two consumers (the bounded-frame
-    // eager-materialization precedent of materializeMixture's perSrc —
-    // exchange reuse across differently-shaped consumers is not
-    // guaranteed, the q182_hotcut lesson).
-    val hist = rows.withColumn("__salt", saltExpr)
+    // documented low-cardinality precondition); the pin serves the
+    // single computation to its two consumers (exchange reuse across
+    // differently-shaped consumers is not guaranteed, the q182_hotcut
+    // lesson).
+    val hist = Pin(rows.withColumn("__salt", saltExpr)
       .groupBy(col(scoreCol), col("__salt"))
-      .agg(count(lit(1)).as("__vc"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("__vc")))
     val cdfW = Window.orderBy(col(scoreCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totW = Window.rowsBetween(

@@ -54,6 +54,28 @@ class BenchSpec extends SparkTestBase {
     assert(Json.str("a\"b\\c\td\u0001") == "\"a\\\"b\\\\c\\td\\u0001\"")
   }
 
+  test("both lines keep their keys in the driver's order") {
+    // the *_raw calibration fields appear only on a decoupled run, right
+    // after `failed`; the rest is fixed
+    def ordered(line: String): List[String] =
+      parse(line).fieldNames.asScala.toList.filterNot(_.endsWith("_raw"))
+    assert(ordered(rec.detail) == List("metric", "value", "unit", "rev",
+      "round", "aqe_min_partition", "failed", "runs", "top10_extra_runs",
+      "calibration_sec", "calibration_sweeps", "calibration_stability",
+      "cpu_stability", "io_stability", "io_calibration_sec",
+      "io_calibration_sweeps", "sweep1_total_sec", "queries", "spread",
+      "spread_flag", "gc_all_runs", "janino_all_runs", "jit_ms_all_runs",
+      "all_runs", "sf", "ts"))
+    assert(ordered(rec.stdout) == List("metric", "value", "unit", "round",
+      "aqe_min_partition", "failed", "runs", "top10_extra_runs",
+      "calibration_sec", "calibration_stability", "cpu_stability",
+      "io_stability", "io_calibration_sec", "sweep1_total_sec", "queries",
+      "spread_top10", "spread_flag", "n_queries",
+      "queries_are_slowest_first", "queries_are_medians", "detail",
+      "history", "sf"))
+    assert(rec.detail.endsWith("}\n") && !rec.stdout.contains("\n"))
+  }
+
   test("round stamp: a scaling run joins round M, any other run is M+1") {
     def stamp(files: Seq[String], cpus: String): Option[Int] = {
       val dir = Files.createTempDirectory("bench_round").toFile

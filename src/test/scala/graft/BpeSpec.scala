@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Bpe
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkTestBase {
@@ -46,9 +47,10 @@ class BpeSpec extends SparkTestBase {
       .createTempDirectory("bpe_ckpt").toString
     val a = merges(Bpe.learnMerges(docs, "text", 3,
       localVocabThreshold = 0L))
-    val b = merges(Bpe.learnMerges(docs, "text", 3,
-      localVocabThreshold = 0L, checkpointDir = Some(dir)))
+    val b = withCheckpointDir(dir)(merges(Bpe.learnMerges(docs, "text", 3,
+      localVocabThreshold = 0L)))
     assert(a === b)
+    assert(filesUnder(dir).nonEmpty) // the loop's pins were reliable
   }
 
   test("encode applies merges in rank order, greedy within runs") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -280,8 +281,9 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("connected components: reliable-checkpoint loop == cached loop") {
-    // threshold=0 forces the distributed min-label loop through both
-    // materialization arms; the fixpoints must be identical.
+    // threshold=0 forces the distributed min-label loop; its per-round
+    // pins run local, then reliable under a session checkpoint dir, and
+    // the fixpoints must be identical.
     val rng = new scala.util.Random(11)
     val pairs = Seq.fill(60)(
       (rng.nextInt(30).toLong, rng.nextInt(30).toLong))
@@ -292,10 +294,11 @@ class DedupSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-cc-ckpt").toString
     try {
-      val reliable = Dedup.connectedComponents(pairs,
-        localEdgeThreshold = 0L, checkpointDir = Some(dir))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val reliable = withCheckpointDir(dir)(Dedup.connectedComponents(pairs,
+        localEdgeThreshold = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(cached == reliable)
+      assert(filesUnder(dir).nonEmpty) // the per-round pins were reliable
       assert(cached.nonEmpty)
     } finally {
       org.apache.commons.io.FileUtils

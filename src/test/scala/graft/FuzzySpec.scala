@@ -127,7 +127,13 @@ class FuzzySpec extends SparkTestBase {
       (i, Seq.fill(rng.nextInt(12))(vocab(rng.nextInt(vocab.size)))))
     val df = sets.toDF("id", "st")
     for (t <- Seq(0.5, 0.8, 1.0)) {
-      val whole = Fuzzy.containmentSelfJoin(df, "id", "st", t, lit(true))
+      val wholeDf = Fuzzy.containmentSelfJoin(df, "id", "st", t, lit(true))
+      // the whole-corpus arm reads its input only through the pinned set
+      // frame: every leaf of its plan is the pin, none is the input
+      assert(wholeDf.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        s"whole corpus re-reads its input, t=$t")
+      val whole = wholeDf
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(whole == bruteContain(sets, t), s"whole corpus, t=$t")
       val slice = Fuzzy.containmentSelfJoin(df, "id", "st", t,

@@ -38,6 +38,59 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(builders.map(_.getFileName.toString) == Seq("GraftSession.scala"))
   }
 
+  /** `src` with comments blanked out (block comments nest, as in
+    * Scala); string and char literals are kept whole, so a comment
+    * opener inside one starts no comment. */
+  private def code(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    def copyTo(j: Int): Unit = { out ++= src.substring(i, j); i = j }
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (src.startsWith("/*", i)) {
+        var depth = 0
+        while ({
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+          else i += 1
+          depth > 0 && i < n
+        }) ()
+        out += ' '
+      } else if (src.startsWith("\"\"\"", i)) {
+        var e = src.indexOf("\"\"\"", i + 3)
+        if (e < 0) e = n - 3
+        while (e + 3 < n && src(e + 3) == '"') e += 1 // closing """"
+        copyTo(e + 3)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        copyTo(math.min(j + 1, n))
+      } else if (src.startsWith("'\\", i)) {
+        copyTo(math.min(src.indexOf('\'', i + 3) + 1, n))
+      } else if (i + 2 < n && src(i) == '\'' && src(i + 2) == '\'') {
+        copyTo(i + 3)
+      } else copyTo(i + 1)
+    }
+    out.toString
+  }
+
+  test("comment stripping keeps code and literals, drops comments") {
+    assert(code("a // b\nc /* d /* e */\n e */ f") == "a \nc   f")
+    assert(code("x(\"//\", '\"', \"\"\"/*\"\"\") // y") ==
+      "x(\"//\", '\"', \"\"\"/*\"\"\") ")
+  }
+
+  test("operators.Pin is the only place src/main checkpoints a frame") {
+    val banned = Seq("localCheckpoint(", ".checkpoint(", "setCheckpointDir")
+    val offenders = mainSources
+      .filterNot(_.endsWith(Paths.get("operators", "Pin.scala")))
+      .filter(p => banned.exists(code(Files.readString(p)).contains))
+    assert(offenders.isEmpty, s"checkpoint outside operators.Pin: $offenders")
+  }
+
   test("src/main reads only the four SPARK_GRAFT_* options") {
     val names = mainSources.flatMap(p =>
       "SPARK_GRAFT_[A-Z_]+".r.findAllIn(Files.readString(p))).toSet

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Graph
+import org.apache.spark.CheckpointDirs.{filesUnder, withCheckpointDir}
 
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -47,10 +48,10 @@ class GraphSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ckpt").toString
     try {
-      val reliable = Graph.pagerank(e, iterations = 2,
-        checkpointDir = Some(dir))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val reliable = withCheckpointDir(dir)(Graph.pagerank(e, iterations = 2)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
       assert(local == reliable) // bit-identical
+      assert(filesUnder(dir).nonEmpty) // the truncations were reliable
       assert(local.nonEmpty)
     } finally {
       org.apache.commons.io.FileUtils

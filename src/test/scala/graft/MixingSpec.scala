@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Mixing
+import graft.operators.{Mixing, Pin}
 
 class MixingSpec extends SparkTestBase {
   import spark.implicits._
@@ -278,7 +278,7 @@ class MixingSpec extends SparkTestBase {
       .toDF("source", "doc_id", "tok")
     val weights = Seq(("a", 0.989), ("tiny", 0.011))
       .toDF("source", "weight")
-    val out = Mixing.materializeMixture(docs, "source", "doc_id",
+    val out = Mixing.materializeMixture(Pin(docs), "source", "doc_id",
         col("tok"), weights, budget = 60L, maxEpochs = 1.0)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(out.keySet === Set("a", "tiny"))
@@ -295,7 +295,7 @@ class MixingSpec extends SparkTestBase {
     assert(out("tiny").getAs[Long]("tokens_kept") === 0L)
     // a source the weights frame is missing fails fast in the guard
     val e = intercept[Exception] {
-      Mixing.materializeMixture(docs, "source", "doc_id", col("tok"),
+      Mixing.materializeMixture(Pin(docs), "source", "doc_id", col("tok"),
         weights.filter(col("source") =!= "tiny"),
         budget = 60L, maxEpochs = 1.0).collect()
     }
@@ -323,7 +323,7 @@ class MixingSpec extends SparkTestBase {
       (None: Option[String], 1.0)).toDF("source", "weight")
     NullGroupParity.assertParity(
       base, "source", "a",
-      df => Mixing.materializeMixture(df, "source", "doc_id",
+      df => Mixing.materializeMixture(Pin(df), "source", "doc_id",
         col("tok"), weights, budget = 60L, maxEpochs = 1.0),
       sig = half => half.select("n_docs", "n_tokens", "weight",
           "alloc_tokens", "capped", "n_docs_kept", "tokens_kept")
@@ -341,7 +341,7 @@ class MixingSpec extends SparkTestBase {
     val docs = (1 to 200).map(i =>
       (Seq("a", "b")(i % 2), i.toLong, 10L)).toDF("source", "doc_id", "tok")
     val weights = Seq(("a", 0.5), ("b", 0.5)).toDF("source", "weight")
-    val out = Mixing.materializeMixture(docs, "source", "doc_id",
+    val out = Mixing.materializeMixture(Pin(docs), "source", "doc_id",
       col("tok"), weights, budget = 500L, maxEpochs = 1.0)
     val plan = finalPlan(out)
     assert(plan.contains("BroadcastHashJoin"),
@@ -365,7 +365,7 @@ class MixingSpec extends SparkTestBase {
     // the plan names a source an upstream filter emptied: the report
     // must surface the discrepancy, not silently redistribute it
     val weights = Seq(("a", 0.6), ("ghost", 0.4)).toDF("source", "weight")
-    val out = Mixing.materializeMixture(docs, "source", "doc_id",
+    val out = Mixing.materializeMixture(Pin(docs), "source", "doc_id",
         col("tok"), weights, budget = 10L, maxEpochs = 1.0)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(out.keySet === Set("a", "ghost"))

@@ -249,30 +249,6 @@ class SelectionSpec extends SparkTestBase {
       "one-pass importanceWeights diverged from the per-occurrence form")
   }
 
-  test("importanceWeightsShared is row-identical to the lazy frame " +
-      "and feeds both select and sample consumers") {
-    val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val target = docs.filter(col("source") === "src13").select("text")
-    val lazyScored = Selection.importanceWeights(docs, target,
-      "doc_id", "text", numBuckets = 1024)
-    val shared = Selection.importanceWeightsShared(docs, target,
-      "doc_id", "text", numBuckets = 1024)
-    try {
-      // materialization must not move a value (checkpoint changes the
-      // physical source, never the arithmetic)
-      assert(shared.except(lazyScored).isEmpty &&
-        lazyScored.except(shared).isEmpty)
-      // and both consumers read the SAME frame Spark-side
-      val kept = shared.filter(col("log_w") > 0).count()
-      val sampled = Selection.gumbelTopK(shared, "doc_id", "log_w",
-        10, "spec").collect().map(_.getLong(0)).toSet
-      val sampledLazy = Selection.gumbelTopK(lazyScored, "doc_id",
-        "log_w", 10, "spec").collect().map(_.getLong(0)).toSet
-      assert(kept === lazyScored.filter(col("log_w") > 0).count())
-      assert(sampled === sampledLazy)
-    } finally shared.unpersist(true)
-  }
-
   test("curriculumSchedule: tiers are equal-frequency up to ties, " +
       "positions unique, schedule interleaves") {
     val rng = new scala.util.Random(23)
