@@ -3,9 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftshim.Shims.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,7 +37,7 @@ case class CountMinCounters(
     seed: Long = 43L,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with ExpectsInputTypes {
 
   require(depth >= 1 && depth <= 16, s"depth must be in [1,16], got $depth")
   require(width >= 2, s"width must be >= 2, got $width")
@@ -48,15 +49,7 @@ case class CountMinCounters(
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"count_min requires a string column, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def createAggregationBuffer(): Array[Long] =
     new Array[Long](depth * width)

@@ -4,9 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.graftshim.Shims.{AbstractDataType, TypeCollection}
 import org.apache.spark.sql.types._
 
 /** `min(count distinct, cap)` with STATE BOUNDED BY `cap` — the
@@ -31,7 +31,8 @@ case class DistinctUpTo(
     cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.HashSet[java.lang.Long]] {
+  extends TypedImperativeAggregate[java.util.HashSet[java.lang.Long]]
+  with ExpectsInputTypes {
 
   require(cap >= 1, s"cap must be >= 1, got $cap")
 
@@ -39,14 +40,8 @@ case class DistinctUpTo(
   override def nullable: Boolean = false
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"distinct_up_to requires an integral column, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(TypeCollection(LongType, IntegerType, ShortType, ByteType))
 
   private def toLong(raw: Any): Long = raw match {
     case l: java.lang.Long => l.longValue()

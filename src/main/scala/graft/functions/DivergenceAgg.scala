@@ -4,8 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.graftshim.Shims.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,7 +51,7 @@ case class DivergenceCounters(
     refQ: Seq[Double],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with ExpectsInputTypes {
 
   require(vocab.nonEmpty, "vocab must be non-empty")
   require(refQ.length == vocab.length + 1,
@@ -87,15 +88,7 @@ case class DivergenceCounters(
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"vocab[${vocab.length}]", s"refQ[${refQ.length}]")
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"divergence_counters requires a string token column, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](k + 1)
 

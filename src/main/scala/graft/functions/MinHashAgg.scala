@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftshim.Shims.{AbstractDataType, TypeCollection}
 import org.apache.spark.sql.types._
 
 /** All k MinHash slots as ONE aggregate: buffer = long[k], update = one
@@ -31,7 +32,7 @@ case class PortableMinHashAgg(
     prime: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with ExpectsInputTypes {
 
   require(coef.nonEmpty, "minhash needs at least one coefficient pair")
 
@@ -43,15 +44,8 @@ case class PortableMinHashAgg(
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType | IntegerType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_agg requires an integral base hash, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(TypeCollection(LongType, IntegerType))
 
   override def createAggregationBuffer(): Array[Long] =
     Array.fill(k)(Long.MaxValue)
@@ -134,7 +128,7 @@ case class OphMinHashAgg(
     offset: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with ExpectsInputTypes {
 
   require(numSlots >= 1, s"numSlots must be >= 1, got $numSlots")
 
@@ -142,15 +136,8 @@ case class OphMinHashAgg(
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType | IntegerType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"oph_minhash_agg requires an integral base hash, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(TypeCollection(LongType, IntegerType))
 
   override def createAggregationBuffer(): Array[Long] =
     Array.fill(numSlots)(Long.MaxValue)

@@ -3,9 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftshim.Shims.{AbstractDataType, TypeCollection}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,7 +43,7 @@ case class MisraGriesCandidates(
     capacity: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgBuffer] {
+  extends TypedImperativeAggregate[MgBuffer] with ExpectsInputTypes {
 
   require(capacity >= 1, s"capacity must be >= 1, got $capacity")
 
@@ -50,15 +51,8 @@ case class MisraGriesCandidates(
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(child.dataType)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType | IntegerType | LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"misra_gries requires string/int/bigint, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(TypeCollection(StringType, IntegerType, LongType))
 
   override def createAggregationBuffer(): MgBuffer =
     new MgBuffer(new java.util.HashMap[Any, Long](capacity * 2), 0L)

@@ -5,10 +5,11 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.Shims.{AbstractDataType, NumericType}
 import org.apache.spark.sql.types._
 
 /** Mutable KLL-style quantile summary: a ladder of level buffers where
@@ -154,7 +155,7 @@ case class QuantileSketchAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllBuffer] {
+  extends TypedImperativeAggregate[KllBuffer] with ExpectsInputTypes {
 
   require(k >= 8, s"sketch capacity k must be >= 8, got $k")
 
@@ -162,15 +163,7 @@ case class QuantileSketchAgg(
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _: NumericType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quantile_sketch requires a numeric column, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(NumericType)
 
   private lazy val toDouble: Any => Double = child.dataType match {
     case DoubleType => v => v.asInstanceOf[Double]
@@ -217,21 +210,13 @@ case class QuantileSketchUnion(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllBuffer] {
+  extends TypedImperativeAggregate[KllBuffer] with ExpectsInputTypes {
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"quantile_sketch_union requires a binary sketch column, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
 
   // k arrives with the first sketch; an empty-group eval serializes the
   // placeholder (k=8, n=0) whose quantiles are all-null anyway
@@ -269,22 +254,15 @@ case class QuantileSketchUnion(
   * at the given probabilities, percentile_disc rank semantics. Null for
   * an empty sketch. */
 case class SketchQuantiles(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType =
     ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sketch_quantiles requires (binary, array<double>), got $other")
-    }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(BinaryType, ArrayType(DoubleType))
 
   override def nullSafeEval(sketch: Any, probs: Any): Any = {
     val buf = KllBuffer.deserialize(sketch.asInstanceOf[Array[Byte]])

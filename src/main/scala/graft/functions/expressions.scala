@@ -1,150 +1,142 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Shims.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Cosine similarity over two `array<float>` columns as a single fused
-  * codegen'd loop — the scale path for brute-force ANN: no `zip_with`
-  * intermediate array materialization, no per-element expression eval.
-  * Stays inside whole-stage codegen (`doGenCode` below).
-  *
-  * Null/edge semantics: null input → null; length mismatch, empty, or
-  * zero-norm → null.
-  */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cosine_similarity requires array<float> inputs, " +
-        s"got ${left.dataType.sql} / ${right.dataType.sql}")
+/** Static row kernels of [[CosineSimilarity]], [[EuclideanDistSq]] and
+  * [[NearestCentroid]]: `eval` and the generated code both call them, so
+  * each loop is written once. Sums run in double over float inputs, in
+  * index order. A kernel assumes its inputs passed the null predicate. */
+object VectorUtil {
+  /** Cosine is null when the lengths differ, the arrays are empty, or one
+    * side is all zeros — exactly the inputs with a zero norm. */
+  def cosineIsNull(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    n != b.numElements() || n == 0 || allZero(a) || allZero(b)
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements() || n == 0) return null
+  def cosine(a: ArrayData, b: ArrayData): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    while (i < n) {
+    while (i < a.numElements()) {
       val x = a.getFloat(i).toDouble
       val y = b.getFloat(i).toDouble
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    if (na == 0.0 || nb == 0.0) null
-    else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Stops at the first nonzero element (±0 count as zero). */
+  private def allZero(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements() && a.getFloat(i) == 0f) i += 1
+    i == a.numElements()
+  }
+
+  def distSqIsNull(a: ArrayData, b: ArrayData): Boolean =
+    a.numElements() != b.numElements()
+
+  def distSq(a: ArrayData, b: ArrayData): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.numElements()) {
+      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
+  /** [[NearestCentroid]]'s argmin of [[distSq]] (semantics there). */
+  def nearest(v: ArrayData, centroids: Array[ArrayData]): Long = {
+    var best = -1L
+    var first = -1L
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < centroids.length) {
+      if (!distSqIsNull(v, centroids(c))) {
+        if (first < 0) first = c
+        val d = distSq(v, centroids(c))
+        if (d < bestD) { bestD = d; best = c }
+      }
+      c += 1
+    }
+    if (best < 0) first else best
+  }
+}
+
+/** Cosine similarity over two `array<float>` columns as one codegen'd
+  * call of [[VectorUtil.cosine]] — the scale path for brute-force ANN:
+  * no `zip_with` intermediate array materialization, no per-element
+  * expression eval.
+  *
+  * Null/edge semantics: null input → null; length mismatch, empty, or
+  * zero-norm → null.
+  */
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(FloatType), ArrayType(FloatType))
+
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    if (VectorUtil.cosineIsNull(a, b)) null else VectorUtil.cosine(a, b)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements() || $n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $x = (double) $a.getFloat($i);
-         |    final double $y = (double) $b.getFloat($i);
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |if (graft.functions.VectorUtil.cosineIsNull($a, $b)) {
+      |  ${ev.isNull} = true;
+      |} else {
+      |  ${ev.value} = graft.functions.VectorUtil.cosine($a, $b);
+      |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
 }
 
-/** Squared Euclidean distance over two `array<float>` columns as one fused
-  * codegen'd loop — used for IVF centroid assignment, where a per-centroid
+/** Squared Euclidean distance over two `array<float>` columns as one
+  * codegen'd call of [[VectorUtil.distSq]] — where a per-centroid
   * `zip_with`+`aggregate` tree would bloat codegen and materialize an
   * intermediate array per centroid per row. Null/length-mismatch → null.
   */
 case class EuclideanDistSq(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"euclidean_dist_sq requires array<float> inputs, " +
-        s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(FloatType), ArrayType(FloatType))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    java.lang.Double.valueOf(acc)
+    if (VectorUtil.distSqIsNull(a, b)) null else VectorUtil.distSq(a, b)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $d =
-         |      (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |if (graft.functions.VectorUtil.distSqIsNull($a, $b)) {
+      |  ${ev.isNull} = true;
+      |} else {
+      |  ${ev.value} = graft.functions.VectorUtil.distSq($a, $b);
+      |}""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): EuclideanDistSq =
@@ -164,7 +156,7 @@ case class EuclideanDistSq(left: Expression, right: Expression)
   * 23 s worst run when bench-JVM GC landed on those walks. Here the
   * matrix lives OUTSIDE the tree — a plain constructor value, shipped to
   * codegen via `addReferenceObj` — so the plan holds one node and the
-  * generated source one loop, at any k.
+  * generated source one call of [[VectorUtil.nearest]], at any k.
   *
   * Semantics (bit-identical to the old tree, including Spark's NaN
   * rules): squared-L2 in double over float inputs, argmin with ties to
@@ -185,90 +177,31 @@ case class EuclideanDistSq(left: Expression, right: Expression)
   * what lets the self-join arms share one exchange. toString prints the
   * matrix SHAPE only (k×dim), keeping plan dumps readable. */
 case class NearestCentroid(child: Expression, centroids: IndexedSeq[IndexedSeq[Float]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centroid requires an array<float> input, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
 
-  @transient private lazy val cents: Array[Array[Float]] =
-    centroids.map(_.toArray).toArray
+  @transient private lazy val cents: Array[ArrayData] =
+    centroids.map(c => ArrayData.toArrayData(c.toArray)).toArray
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    if (v == null) return java.lang.Long.valueOf(-1L)
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    var best = -1L
-    var firstCandidate = -1L // lowest-id length-matching centroid
-    var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < cents.length) {
-      val cv = cents(c)
-      if (cv.length == n) {
-        if (firstCandidate < 0) firstCandidate = c.toLong
-        var acc = 0.0
-        var i = 0
-        while (i < n) {
-          val d = a.getFloat(i).toDouble - cv(i).toDouble
-          acc += d * d
-          i += 1
-        }
-        if (acc < bestD) { bestD = acc; best = c.toLong }
-      }
-      c += 1
-    }
-    // all candidate distances NaN (NaN vector): old-tree/Spark NaN=NaN
-    // semantics crown the first length-matching centroid — see scaladoc
-    java.lang.Long.valueOf(if (best < 0) firstCandidate else best)
+    if (v == null) -1L else VectorUtil.nearest(v.asInstanceOf[ArrayData], cents)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val childGen = child.genCode(ctx)
-    val mat = ctx.addReferenceObj("centroids", cents, "float[][]")
-    val a = ctx.freshName("vec")
-    val n = ctx.freshName("n")
-    val bestD = ctx.freshName("bestD")
-    val c = ctx.freshName("c")
-    val cv = ctx.freshName("cv")
-    val acc = ctx.freshName("acc")
-    val i = ctx.freshName("i")
-    val d = ctx.freshName("d")
-    val firstCand = ctx.freshName("firstCand")
+    val mat = ctx.addReferenceObj("centroids", cents,
+      "org.apache.spark.sql.catalyst.util.ArrayData[]")
     ev.copy(
       code = code"""
         ${childGen.code}
-        long ${ev.value} = -1L;
-        if (!${childGen.isNull}) {
-          org.apache.spark.sql.catalyst.util.ArrayData $a = ${childGen.value};
-          final int $n = $a.numElements();
-          double $bestD = Double.POSITIVE_INFINITY;
-          long $firstCand = -1L;
-          for (int $c = 0; $c < $mat.length; $c++) {
-            final float[] $cv = $mat[$c];
-            if ($cv.length == $n) {
-              if ($firstCand < 0) $firstCand = (long) $c;
-              double $acc = 0.0;
-              for (int $i = 0; $i < $n; $i++) {
-                final double $d =
-                  (double) $a.getFloat($i) - (double) $cv[$i];
-                $acc += $d * $d;
-              }
-              if ($acc < $bestD) { $bestD = $acc; ${ev.value} = (long) $c; }
-            }
-          }
-          if (${ev.value} < 0) ${ev.value} = $firstCand;
-        }
+        final long ${ev.value} = ${childGen.isNull} ? -1L
+          : graft.functions.VectorUtil.nearest(${childGen.value}, $mat);
       """,
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
@@ -302,7 +235,7 @@ case class NearestCentroid(child: Expression, centroids: IndexedSeq[IndexedSeq[F
   * reuses a filter-probe subtree, and each [[graft.operators
   * .BloomJoin]] call builds its own filter anyway. */
 case class BloomProbe(child: Expression, bloomBytes: Array[Byte])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   // an EMPTY build side serializes to null (BloomFilterAggregate.eval
   // returns null at cardinality 0) — callers must map that to a null
@@ -315,15 +248,7 @@ case class BloomProbe(child: Expression, bloomBytes: Array[Byte])
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_probe expects a LONG hash input, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
 
   @transient private lazy val filter: org.apache.spark.util.sketch.BloomFilter =
     org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -360,21 +285,13 @@ case class BloomProbe(child: Expression, bloomBytes: Array[Byte])
   * in dedup pipelines, not in inner join loops.
   */
 case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash64 requires array<string>, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
@@ -417,7 +334,7 @@ case class SimHash64(child: Expression)
   * row, not a hot inner loop.
   */
 case class NormalizeUnicode(child: Expression, form: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
@@ -426,15 +343,7 @@ case class NormalizeUnicode(child: Expression, form: String)
   @transient private lazy val normForm =
     java.text.Normalizer.Form.valueOf(form)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"normalize_unicode requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     UTF8String.fromString(java.text.Normalizer.normalize(
@@ -449,21 +358,13 @@ case class NormalizeUnicode(child: Expression, form: String)
   * cheap; used where a 64-bit integer fingerprint beats a hex md5.
   */
 case class RollingHash(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"rolling_hash requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any = {
     val bytes = v.asInstanceOf[UTF8String].getBytes
@@ -480,17 +381,51 @@ case class RollingHash(child: Expression)
     copy(child = c)
 }
 
-/** Static helper for [[WordShingles]] — kept in a standalone object so the
-  * generated Java can call it through the Scala static forwarder. */
+/** Static helpers for [[WordShingles]] and [[PositionalWordShingles]] —
+  * kept in a standalone object so the generated Java can call them
+  * through the Scala static forwarder. Both share one tokenizer:
+  * lowercase, whitespace-split (Java-regex `\s+` semantics: space, \t,
+  * \n, \u000B, \f, \r; empties dropped), word n-grams joined by a
+  * single space. */
 object ShingleUtil {
-  /** Lowercase, whitespace-tokenize (Java-regex `\s+` semantics: space,
-    * \t, \n, \u000B, \f, \r; empties dropped), build word n-grams joined
-    * by a single space, distinct preserving first occurrence — one tight
-    * pass, value-identical to the declarative composition
+  /** Distinct n-grams preserving first occurrence — one tight pass,
+    * value-identical to the declarative composition
     * `array_distinct(transform(..., concat_ws(" ", ...)))` over
     * `filter(split(lower(text), "\s+"), _ =!= "")`.
     */
   def compute(s: UTF8String, n: Int): ArrayData = {
+    val toks = tokens(s)
+    val out = new java.util.LinkedHashSet[String]()
+    val sb = if (n == 1) null else new java.lang.StringBuilder()
+    var j = 0
+    while (j <= toks.size() - n) { out.add(gram(toks, j, n, sb)); j += 1 }
+    val arr = new Array[AnyRef](out.size())
+    val it = out.iterator()
+    var k = 0
+    while (it.hasNext) { arr(k) = UTF8String.fromString(it.next()); k += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+  }
+
+  /** All n-grams IN POSITION ORDER (index = 0-based token offset),
+    * keeping duplicates — the postings form substring-dedup needs.
+    * Value-identical to
+    * `transform(sequence(...), i -> array_join(slice(tokens, i, n), " "))`
+    * over the same token filter, which as an interpreted
+    * higher-order-function tree costs ~30× more per row (measured:
+    * 3.1 s → 0.1 s for 246k postings at sf0.1). */
+  def positional(s: UTF8String, n: Int): ArrayData = {
+    val toks = tokens(s)
+    val arr = new Array[AnyRef](math.max(toks.size() - n + 1, 0))
+    val sb = if (n == 1) null else new java.lang.StringBuilder()
+    var j = 0
+    while (j < arr.length) {
+      arr(j) = UTF8String.fromString(gram(toks, j, n, sb))
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+  }
+
+  private def tokens(s: UTF8String): java.util.ArrayList[String] = {
     val str = s.toLowerCase.toString
     val toks = new java.util.ArrayList[String]()
     var i = 0
@@ -501,32 +436,23 @@ object ShingleUtil {
       while (i < len && !isWs(str.charAt(i))) i += 1
       if (i > start) toks.add(str.substring(start, i))
     }
-    val nt = toks.size()
-    val out = new java.util.LinkedHashSet[String]()
-    if (n == 1) {
-      var j = 0
-      while (j < nt) { out.add(toks.get(j)); j += 1 }
-    } else {
-      var j = 0
-      val sb = new java.lang.StringBuilder()
-      while (j <= nt - n) {
-        sb.setLength(0)
-        var w = 0
-        while (w < n) {
-          if (w > 0) sb.append(' ')
-          sb.append(toks.get(j + w))
-          w += 1
-        }
-        out.add(sb.toString)
-        j += 1
-      }
-    }
-    val arr = new Array[AnyRef](out.size())
-    val it = out.iterator()
-    var k = 0
-    while (it.hasNext) { arr(k) = UTF8String.fromString(it.next()); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+    toks
   }
+
+  /** Tokens j until j + n joined by single spaces. */
+  private def gram(toks: java.util.ArrayList[String], j: Int, n: Int,
+      sb: java.lang.StringBuilder): String =
+    if (n == 1) toks.get(j)
+    else {
+      sb.setLength(0)
+      var w = 0
+      while (w < n) {
+        if (w > 0) sb.append(' ')
+        sb.append(toks.get(j + w))
+        w += 1
+      }
+      sb.toString
+    }
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
@@ -599,23 +525,14 @@ object JaccardUtil {
   * dedup/similarity-join chains, where it runs once per candidate pair
   * (the hot loop of q35/q36/q57). */
 case class JaccardSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jaccard_similarity requires array<string> inputs, " +
-        s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
 
   override def nullSafeEval(l: Any, r: Any): Any =
     JaccardUtil.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
@@ -646,23 +563,14 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   * allocation-free merge per pair. Value- and null-identical to
   * [[JaccardSimilarity]] on such inputs. */
 case class JaccardSortedSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sorted_similarity requires array<string> inputs, " +
-        s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
 
   override def nullSafeEval(l: Any, r: Any): Any =
     JaccardUtil.computeSorted(
@@ -692,23 +600,14 @@ case class JaccardSortedSimilarity(left: Expression, right: Expression)
   * (nullIntolerant); both-empty yields 0 (the caller divides by |a|,
   * which it guards). */
 case class IntersectCountSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"intersect_count_sorted requires array<string> inputs, " +
-        s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
 
   override def nullSafeEval(l: Any, r: Any): Any =
     java.lang.Long.valueOf(JaccardUtil.interSorted(
@@ -799,7 +698,7 @@ object SegmentKeyUtil {
   * tiny call site, fast both per-row and to compile.
   */
 case class EditSegmentKeys(child: Expression, k: Int, probe: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(k >= 1, s"edit-distance threshold must be >= 1, got $k")
 
@@ -812,15 +711,7 @@ case class EditSegmentKeys(child: Expression, k: Int, probe: Boolean)
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"edit_segment_keys requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     SegmentKeyUtil.compute(v.asInstanceOf[UTF8String], k, probe)
@@ -842,7 +733,7 @@ case class EditSegmentKeys(child: Expression, k: Int, probe: Boolean)
   * unchanged (list_distinct over string_split_regex n-grams).
   */
 case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
@@ -850,15 +741,7 @@ case class WordShingles(child: Expression, n: Int)
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingles requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     ShingleUtil.compute(v.asInstanceOf[UTF8String], n)
@@ -916,21 +799,13 @@ object EntropyUtil {
   * codegen; no per-char row explosion (the declarative equivalent is an
   * explode + two shuffles PER DOCUMENT COLUMN at 100 TB). */
 case class CharEntropy(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"char_entropy requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     java.lang.Double.valueOf(
@@ -944,57 +819,11 @@ case class CharEntropy(child: Expression)
     copy(child = c)
 }
 
-/** Static helper for [[PositionalWordShingles]] — standalone object so
-  * generated Java reaches it through the static forwarder. */
-object PositionalShingleUtil {
-  /** All word n-grams of the text IN POSITION ORDER (index = 0-based
-    * token offset), same tokenizer as [[ShingleUtil.compute]] (lowercase,
-    * Java `\s+` splits, empties dropped) but keeping duplicates and
-    * order — the postings form substring-dedup needs. Value-identical to
-    * `transform(sequence(...), i -> array_join(slice(tokens, i, n), " "))`
-    * over `filter(split(lower(text), "\s+"), _ =!= "")`, which as an
-    * interpreted higher-order-function tree costs ~30× more per row
-    * (measured: 3.1 s → 0.1 s for 246k postings at sf0.1). */
-  def compute(s: UTF8String, n: Int): ArrayData = {
-    val str = s.toLowerCase.toString
-    val toks = new java.util.ArrayList[String]()
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      while (i < len && isWs(str.charAt(i))) i += 1
-      val start = i
-      while (i < len && !isWs(str.charAt(i))) i += 1
-      if (i > start) toks.add(str.substring(start, i))
-    }
-    val nt = toks.size()
-    val count = math.max(nt - n + 1, 0)
-    val arr = new Array[AnyRef](count)
-    val sb = new java.lang.StringBuilder()
-    var j = 0
-    while (j < count) {
-      sb.setLength(0)
-      var w = 0
-      while (w < n) {
-        if (w > 0) sb.append(' ')
-        sb.append(toks.get(j + w))
-        w += 1
-      }
-      arr(j) = UTF8String.fromString(sb.toString)
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-  }
-
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
-}
-
 /** Positional word n-grams (duplicates and order kept; element index =
   * token offset) as one fused codegen pass — the postings generator for
   * [[graft.operators.RepeatedSpans]]. */
 case class PositionalWordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
@@ -1002,22 +831,14 @@ case class PositionalWordShingles(child: Expression, n: Int)
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"positional_word_shingles requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
-    PositionalShingleUtil.compute(v.asInstanceOf[UTF8String], n)
+    ShingleUtil.positional(v.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PositionalShingleUtil.compute($c, $n);")
+      s"${ev.value} = graft.functions.ShingleUtil.positional($c, $n);")
 
   override protected def withNewChildInternal(
       c: Expression): PositionalWordShingles =
@@ -1053,21 +874,13 @@ object CompressionRatioUtil {
 }
 
 case class CompressionRatio(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"compression_ratio requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     CompressionRatioUtil.ratio(v.asInstanceOf[UTF8String])
@@ -1120,7 +933,7 @@ object Md5PrefixUtil {
   * hot paths. hexChars ∈ [1, 15] so the result stays non-negative.
   */
 case class Md5Prefix64(child: Expression, hexChars: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(hexChars >= 1 && hexChars <= 15,
     s"hexChars must be in [1, 15], got $hexChars")
@@ -1129,15 +942,7 @@ case class Md5Prefix64(child: Expression, hexChars: Int)
   override def nullable: Boolean = child.nullable
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"md5_prefix64 requires string, got ${other.sql}")
-    }
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
 
   override def nullSafeEval(v: Any): Any =
     Md5PrefixUtil.compute(v.asInstanceOf[UTF8String], hexChars)

@@ -1104,19 +1104,25 @@ object Dedup {
     // must not execute once per union arm.
     val fwd = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .cache()
-    val nEdges = fwd.count()
-    if (nEdges <= localEdgeThreshold) {
-      val out = localComponents(fwd, pairs.schema("id_a").dataType)
-      fwd.unpersist()
-      return out
-    }
-    // symmetric edge list, self-loops added so singletons keep their id
-    val edges = fwd
-      .union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .union(fwd.select(col("src"), col("src").as("dst")))
-      .union(fwd.select(col("dst").as("src"), col("dst")))
-      .distinct()
-      .cache()
+    try {
+      if (fwd.count() <= localEdgeThreshold)
+        localComponents(fwd, pairs.schema("id_a").dataType)
+      else {
+        // symmetric edge list, self-loops added so singletons keep their id
+        val edges = fwd
+          .union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+          .union(fwd.select(col("src"), col("src").as("dst")))
+          .union(fwd.select(col("dst").as("src"), col("dst")))
+          .distinct()
+          .cache()
+        try minLabels(edges, maxIterations) finally edges.unpersist()
+      }
+    } finally fwd.unpersist()
+  }
+
+  /** [[connectedComponents]]' distributed loop over a symmetric edge list
+    * (`src`, `dst`) that carries a self-loop per node. */
+  private def minLabels(edges: DataFrame, maxIterations: Int): DataFrame = {
     var labels = Pin(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("component")))
     // Convergence check without a join: labels under min-propagation are
@@ -1145,8 +1151,6 @@ object Dedup {
       sig = nextSig
       iter += 1
     }
-    edges.unpersist()
-    fwd.unpersist()
     if (!converged) {
       // min-label propagation needs O(component diameter) rounds; a chain
       // longer than maxIterations would silently split clusters otherwise.

@@ -74,6 +74,17 @@ object Graph {
     val e = Pin(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().cache()
+    // e/eo are pins (blocks release on RDD GC, like the per-iteration
+    // truncations); only the nodes cache needs an explicit release, also
+    // when a step throws
+    try ranks(e, nodes, iterations, damping, truncateEvery)
+    finally nodes.unpersist()
+  }
+
+  /** [[pagerank]] over its pinned distinct edges `e` and its cached
+    * node set. */
+  private def ranks(e: DataFrame, nodes: DataFrame, iterations: Int,
+      damping: Double, truncateEvery: Int): DataFrame = {
     // Node total as a ONE-ROW broadcast frame, not a driver collect
     // (round 14): `nodes.count()` here used to be its own full Spark
     // action — AQE planning, job scheduling, and the e-distinct +
@@ -141,11 +152,12 @@ object Graph {
     // One node-wide pass at the end reconstructs pr for every node,
     // including isolated sources that never receive mass. The FINAL
     // frame is always truncated: the invariant caches are released
-    // below, so the returned frame must not re-derive them.
+    // when pagerank returns, so the returned frame must not re-derive
+    // them.
     val pr =
       if (iterations == 0)
         // truncated like every other exit (round 21, VERDICT r20 minor):
-        // the caches are released below, so an untruncated frame would
+        // the caches are released on return, so an untruncated frame would
         // re-derive the just-unpersisted nodes on first use
         Pin(nodes.crossJoin(broadcast(nTot))
           .select(col("id"), (lit(1.0) / col("__n")).as("pr")))
@@ -156,10 +168,6 @@ object Graph {
             ((lit(1.0 - damping) / col("__n")) +
               lit(damping) * coalesce(col("__mass"), lit(0.0)))
               .as("pr")))
-    // e/eo are pins (blocks release on RDD GC, like the per-iteration
-    // truncations); only the nodes cache needs an
-    // explicit release
-    nodes.unpersist()
     pr
   }
 }

@@ -133,44 +133,45 @@ object Similarity {
     // collect), so the cache would be pure block-manager churn — skip it.
     val doCache = iterations > 0
     val cached = if (doCache) corpus.cache() else corpus
-    var centroids: IndexedSeq[Seq[Float]] =
-      cached.orderBy(col(idCol)).limit(nCentroids)
-        .select(col(vecCol)).collect()
-        .map(_.getSeq[Float](0).toIndexedSeq).toIndexedSeq
-    var assigned: DataFrame = null
-    var iter = 0
-    while (iter <= iterations) {
-      assigned = cached.withColumn("__centroid",
-        nearestCentroid(col(vecCol), centroids))
-      if (iter < iterations) {
-        // Deterministic mean: per-dimension sums go through DECIMAL —
-        // a double sum's value depends on partial-aggregation order, which
-        // would make the trained centroids (and IVF results) vary run to
-        // run. posexplode + narrow (centroid, dim) aggregation instead of
-        // a dim-wide agg: one small shuffle, and it survives dim >> 64.
-        val means = assigned
-          .select(col("__centroid"),
-            posexplode(col(vecCol)).as(Seq("__pos", "__val")))
-          .groupBy(col("__centroid"), col("__pos"))
-          .agg(sum(col("__val").cast("decimal(28,12)")).cast("double")
-            .as("__sum"), count(lit(1)).as("__n"))
-          .collect()
-        val byId = means
-          .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-          .groupBy(_._1)
-        centroids = centroids.indices.map { c =>
-          byId.get(c.toLong) match {
-            case Some(rows) if rows.head._4 > 0 =>
-              val n = rows.head._4
-              rows.sortBy(_._2).map(t => (t._3 / n).toFloat).toIndexedSeq
-            case _ => centroids(c)
+    try {
+      var centroids: IndexedSeq[Seq[Float]] =
+        cached.orderBy(col(idCol)).limit(nCentroids)
+          .select(col(vecCol)).collect()
+          .map(_.getSeq[Float](0).toIndexedSeq).toIndexedSeq
+      var assigned: DataFrame = null
+      var iter = 0
+      while (iter <= iterations) {
+        assigned = cached.withColumn("__centroid",
+          nearestCentroid(col(vecCol), centroids))
+        if (iter < iterations) {
+          // Deterministic mean: per-dimension sums go through DECIMAL —
+          // a double sum's value depends on partial-aggregation order, which
+          // would make the trained centroids (and IVF results) vary run to
+          // run. posexplode + narrow (centroid, dim) aggregation instead of
+          // a dim-wide agg: one small shuffle, and it survives dim >> 64.
+          val means = assigned
+            .select(col("__centroid"),
+              posexplode(col(vecCol)).as(Seq("__pos", "__val")))
+            .groupBy(col("__centroid"), col("__pos"))
+            .agg(sum(col("__val").cast("decimal(28,12)")).cast("double")
+              .as("__sum"), count(lit(1)).as("__n"))
+            .collect()
+          val byId = means
+            .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
+            .groupBy(_._1)
+          centroids = centroids.indices.map { c =>
+            byId.get(c.toLong) match {
+              case Some(rows) if rows.head._4 > 0 =>
+                val n = rows.head._4
+                rows.sortBy(_._2).map(t => (t._3 / n).toFloat).toIndexedSeq
+              case _ => centroids(c)
+            }
           }
         }
+        iter += 1
       }
-      iter += 1
-    }
-    if (doCache) cached.unpersist()
-    IvfIndex(centroids, assigned)
+      IvfIndex(centroids, assigned)
+    } finally if (doCache) cached.unpersist()
   }
 
   /** Nearest-centroid id (argmin squared L2, ties broken by lowest
@@ -215,57 +216,58 @@ object Similarity {
         slice(col(vecCol), s * subDim + 1, subDim)): _*))
         .as(Seq("__sub", "__subvec")))
       .cache()
-    // Init from the lowest-id rows, DEDUPLICATED per subspace: duplicate
-    // leading subvectors would collide centroids at iteration 0, and with
-    // few Lloyd iterations + empty-cell carry-over the collided codes
-    // could stay duplicated forever, wasting codebook capacity. Collect a
-    // few times k candidates so dedup still fills k distinct seeds on
-    // repetitive corpora; when the corpus has fewer than k distinct
-    // subvectors the tail seeds all repeat the LAST distinct one (the
-    // clamped index below), and Lloyd + empty-cell carry-over re-spreads
-    // them in later iterations.
-    val init = subs.orderBy(col("__id"), col("__sub"))
-      .limit(4 * m * k).collect()
-      .map(r => (r.getInt(1), r.getSeq[Float](2)))
-      .groupBy(_._1)
-    require(init.nonEmpty, "trainPq requires a non-empty corpus")
-    var books: IndexedSeq[IndexedSeq[Seq[Float]]] =
-      (0 until m).map { s =>
-        val rows = init.getOrElse(s, Array.empty).map(_._2)
-          .distinct
-        require(rows.nonEmpty, s"trainPq: no init rows for subspace $s")
-        (0 until k).map(i =>
-          rows(math.min(i, rows.length - 1)).toIndexedSeq).toIndexedSeq
-      }
-    var iter = 0
-    while (iter < iterations) {
-      val assigned = subs.withColumn("__c", assignPq(col("__subvec"),
-        col("__sub"), books))
-      val means = assigned
-        .select(col("__sub"), col("__c"),
-          posexplode(col("__subvec")).as(Seq("__pos", "__val")))
-        .groupBy(col("__sub"), col("__c"), col("__pos"))
-        .agg(sum(col("__val").cast("decimal(28,12)")).cast("double")
-          .as("__sum"), count(lit(1)).as("__n"))
-        .collect()
-        .map(r => ((r.getInt(0), r.getLong(1)), (r.getInt(2),
-          r.getDouble(3), r.getLong(4))))
+    try {
+      // Init from the lowest-id rows, DEDUPLICATED per subspace: duplicate
+      // leading subvectors would collide centroids at iteration 0, and with
+      // few Lloyd iterations + empty-cell carry-over the collided codes
+      // could stay duplicated forever, wasting codebook capacity. Collect a
+      // few times k candidates so dedup still fills k distinct seeds on
+      // repetitive corpora; when the corpus has fewer than k distinct
+      // subvectors the tail seeds all repeat the LAST distinct one (the
+      // clamped index below), and Lloyd + empty-cell carry-over re-spreads
+      // them in later iterations.
+      val init = subs.orderBy(col("__id"), col("__sub"))
+        .limit(4 * m * k).collect()
+        .map(r => (r.getInt(1), r.getSeq[Float](2)))
         .groupBy(_._1)
-      books = (0 until m).map { s =>
-        (0 until k).map { c =>
-          means.get((s, c.toLong)) match {
-            case Some(rows) =>
-              val n = rows.head._2._3
-              rows.map(_._2).sortBy(_._1)
-                .map(t => (t._2 / n).toFloat).toIndexedSeq
-            case None => books(s)(c) // empty cell keeps its centroid
+      require(init.nonEmpty, "trainPq requires a non-empty corpus")
+      var books: IndexedSeq[IndexedSeq[Seq[Float]]] =
+        (0 until m).map { s =>
+          val rows = init.getOrElse(s, Array.empty).map(_._2)
+            .distinct
+          require(rows.nonEmpty, s"trainPq: no init rows for subspace $s")
+          (0 until k).map(i =>
+            rows(math.min(i, rows.length - 1)).toIndexedSeq).toIndexedSeq
+        }
+      var iter = 0
+      while (iter < iterations) {
+        val assigned = subs.withColumn("__c", assignPq(col("__subvec"),
+          col("__sub"), books))
+        val means = assigned
+          .select(col("__sub"), col("__c"),
+            posexplode(col("__subvec")).as(Seq("__pos", "__val")))
+          .groupBy(col("__sub"), col("__c"), col("__pos"))
+          .agg(sum(col("__val").cast("decimal(28,12)")).cast("double")
+            .as("__sum"), count(lit(1)).as("__n"))
+          .collect()
+          .map(r => ((r.getInt(0), r.getLong(1)), (r.getInt(2),
+            r.getDouble(3), r.getLong(4))))
+          .groupBy(_._1)
+        books = (0 until m).map { s =>
+          (0 until k).map { c =>
+            means.get((s, c.toLong)) match {
+              case Some(rows) =>
+                val n = rows.head._2._3
+                rows.map(_._2).sortBy(_._1)
+                  .map(t => (t._2 / n).toFloat).toIndexedSeq
+              case None => books(s)(c) // empty cell keeps its centroid
+            }
           }
         }
+        iter += 1
       }
-      iter += 1
-    }
-    subs.unpersist()
-    PqCodebooks(m, k, subDim, books)
+      PqCodebooks(m, k, subDim, books)
+    } finally subs.unpersist()
   }
 
   /** Combined per-subspace nearest-centroid id: the (sub, subvec) row's
@@ -318,13 +320,16 @@ object Similarity {
       encoded: DataFrame, vecCol: String, books: PqCodebooks): Double = {
     val err = (0 until books.m).map { s =>
       val sub = slice(col(vecCol), s * books.subDim + 1, books.subDim)
-      // distance of the subvector to ITS assigned centroid
-      books.centroids(s).zipWithIndex.foldRight(lit(0.0): Column) {
-        case ((cvec, c), other) =>
-          when(element_at(col("pq_code"), s + 1) === c,
-            VectorFunctions.distSqFast(sub, VectorFunctions.floatVec(cvec)))
-            .otherwise(other)
-      }
+      val code = element_at(col("pq_code"), s + 1)
+      // distance of the subvector to ITS assigned centroid, looked up in
+      // the subspace's codebook literal: one node per subspace (a k-way
+      // CASE per subspace outgrew Janino's 64 KB method limit at m = k =
+      // 16, and the stage fell back to interpreted evaluation); a code
+      // outside [0, k) or null adds 0, as that CASE's default did
+      val book = array(books.centroids(s).map(VectorFunctions.floatVec): _*)
+      when(code >= 0 && code < books.k,
+        VectorFunctions.distSqFast(sub, element_at(book, code + 1)))
+        .otherwise(lit(0.0))
     }.reduce(_ + _)
     encoded.agg(avg(err)).head().getDouble(0)
   }

@@ -15,6 +15,15 @@ object Shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The input-type vocabulary of Catalyst's `ExpectsInputTypes`, which
+    * Spark keeps `private[sql]`: `inputTypes` is a Seq[AbstractDataType];
+    * a TypeCollection accepts any one of its types, NumericType any
+    * numeric type. */
+  type AbstractDataType = org.apache.spark.sql.types.AbstractDataType
+  def TypeCollection(types: AbstractDataType*): AbstractDataType =
+    org.apache.spark.sql.types.TypeCollection(types: _*)
+  val NumericType: AbstractDataType = org.apache.spark.sql.types.NumericType
+
   /** try_cast as a Column op (null on failure even under ANSI mode —
     * Spark 4 has no `Column.try_cast`). */
   def tryCast(c: Column, to: org.apache.spark.sql.types.DataType): Column =

@@ -259,6 +259,21 @@ class DedupSpec extends SparkTestBase {
     assert(comp(20L) == 20L)
   }
 
+  test("connected components: a failing pair frame leaves nothing cached") {
+    // a range, not a local relation: the error must surface while the
+    // cached frame fills, not while the optimizer folds the rows
+    val pairs = spark.range(1, 4).select(col("id").as("id_a"),
+      when(col("id") === 2L, raise_error(lit("bad pair")))
+        .otherwise(col("id") + 1).as("id_b"))
+    // only NEW entries count: the context cleaner may drop older ones
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    intercept[Exception](Dedup.connectedComponents(pairs).collect())
+    intercept[Exception](Dedup.connectedComponents(pairs,
+      localEdgeThreshold = 0L).collect())
+    assert((persisted -- before).isEmpty)
+  }
+
   test("connected components: local union-find == distributed propagation") {
     // Random graphs through BOTH arms of the hybrid: default threshold
     // takes the driver union-find, threshold=0 forces the distributed

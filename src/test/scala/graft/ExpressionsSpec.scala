@@ -1,8 +1,16 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
-import graft.functions.{RollingHash, VectorFunctions => VF}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions._
+import graft.functions.{VectorFunctions => VF}
 
 class ExpressionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -24,7 +32,7 @@ class ExpressionsSpec extends SparkTestBase {
     assert(cosOf(Seq.empty, Seq.empty).isEmpty) // empty
   }
 
-  test("CosineSimilarity interpreted eval matches codegen") {
+  test("CosineSimilarity fused path matches the built-in composition") {
     val df = spark.read.parquet(s"$sf001/embeddings.parquet").limit(50)
     val q = df.orderBy(col("vec_id")).head().getSeq[Float](1)
     val fused = df.select(col("vec_id"),
@@ -344,5 +352,169 @@ class ExpressionsSpec extends SparkTestBase {
       .select(graft.functions.PortableHash.md5Prefix(col("s"), 8))
       .collect().head.getLong(0)
     assert(interpreted == viaDf)
+  }
+
+  /** One row of the parity table: an expression over bound inputs of
+    * `types`, the input rows to evaluate it on, and one wrong-typed
+    * input list that analysis must reject. */
+  private case class ParityCase(
+      name: String,
+      types: Seq[DataType],
+      build: Seq[Expression] => Expression,
+      rows: Seq[Seq[Any]],
+      wrong: Seq[DataType])
+
+  private lazy val parityCases: Seq[ParityCase] = {
+    val floats = ArrayType(FloatType)
+    val strings = ArrayType(StringType)
+    def fv(xs: Float*): Any = new GenericArrayData(xs.map(x => x: Any).toArray)
+    def sv(xs: String*): Any =
+      new GenericArrayData(xs.map(x => UTF8String.fromString(x): Any).toArray)
+    def str(x: String): Any = UTF8String.fromString(x)
+    val nan = Float.NaN
+    // null, empty, mismatched lengths, all-zero, NaN, ordinary
+    val vecPairs: Seq[Seq[Any]] = Seq(
+      Seq(null, fv(1f, 2f)), Seq(fv(1f, 2f), null), Seq(fv(), fv()),
+      Seq(fv(1f, 2f), fv(1f, 2f, 3f)), Seq(fv(0f, 0f), fv(1f, 2f)),
+      Seq(fv(1f, 2f), fv(0f, -0f)), Seq(fv(0f, 0f), fv(nan, 1f)),
+      Seq(fv(nan, 1f), fv(1f, 2f)), Seq(fv(Float.PositiveInfinity, 1f),
+        fv(1f, 1f)), Seq(fv(1f, 2f, 3f), fv(4f, -5f, 6f)),
+      Seq(fv(1e-30f, 3f), fv(2f, 1e30f)))
+    val vecs: Seq[Seq[Any]] = Seq(Seq(null), Seq(fv()), Seq(fv(9f)),
+      Seq(fv(0f, 0f)), Seq(fv(nan, nan)), Seq(fv(nan, 1f)),
+      Seq(fv(1.2f, 0.9f)), Seq(fv(3f, 3.9f)), Seq(fv(1f, 2f, 3f)))
+    val texts: Seq[Seq[Any]] = Seq(null, "", "NaN", "one",
+      "  A  b\tc a B ", "x y z x y x y", "é café € 😀",
+      "\u000B\f\r\n", "kitten sitting").map(t => Seq(str(t)))
+    val setPairs: Seq[Seq[Any]] = Seq(
+      Seq(null, sv("a")), Seq(sv("a"), null), Seq(sv(), sv()),
+      Seq(sv(), sv("a", "b")), Seq(sv("a"), sv("a", "b", "c")),
+      Seq(sv("a", "b", "c"), sv("b", "c", "d")), Seq(sv("NaN"), sv("NaN")))
+    val tokenArrays: Seq[Seq[Any]] = Seq(Seq(null), Seq(sv()),
+      Seq(sv("a", "b")), Seq(new GenericArrayData(Array[Any](null,
+        UTF8String.fromString("a")))), Seq(sv("NaN", "x", "y")))
+    val cents: IndexedSeq[IndexedSeq[Float]] = IndexedSeq(
+      IndexedSeq(0f, 0f), IndexedSeq(1f, 1f), IndexedSeq(1f, 1f),
+      IndexedSeq(3f, 4f), IndexedSeq(1f, 2f, 3f))
+    val bloom = {
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(100)
+      (1L to 10L).foreach(bf.putLong)
+      val out = new java.io.ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray
+    }
+    def sketch(xs: Double*): Array[Byte] = {
+      val b = new KllBuffer(8, 0L)
+      xs.foreach(b.insert)
+      b.serialize()
+    }
+    def probs(ps: Double*): Any = new GenericArrayData(ps.map(p => p: Any).toArray)
+    def unary(name: String, t: DataType, rows: Seq[Seq[Any]],
+        wrong: DataType)(f: Expression => Expression) =
+      ParityCase(name, Seq(t), es => f(es.head), rows, Seq(wrong))
+    def binary(name: String, t: DataType, rows: Seq[Seq[Any]],
+        wrong: Seq[DataType])(f: (Expression, Expression) => Expression) =
+      ParityCase(name, Seq(t, t), es => f(es(0), es(1)), rows, wrong)
+    Seq(
+      binary("CosineSimilarity", floats, vecPairs,
+        Seq(ArrayType(DoubleType), floats))(CosineSimilarity(_, _)),
+      binary("EuclideanDistSq", floats, vecPairs,
+        Seq(floats, ArrayType(IntegerType)))(EuclideanDistSq(_, _)),
+      unary("NearestCentroid", floats, vecs, ArrayType(DoubleType))(
+        NearestCentroid(_, cents)),
+      unary("BloomProbe", LongType, Seq(null, 0L, 5L, 1000L,
+        Long.MinValue).map(Seq(_)), IntegerType)(BloomProbe(_, bloom)),
+      unary("SimHash64", strings, tokenArrays, StringType)(SimHash64(_)),
+      unary("NormalizeUnicode", StringType, texts, BinaryType)(
+        NormalizeUnicode(_, "NFC")),
+      unary("RollingHash", StringType, texts, LongType)(RollingHash(_)),
+      binary("JaccardSimilarity", strings, setPairs,
+        Seq(strings, ArrayType(LongType)))(JaccardSimilarity(_, _)),
+      binary("JaccardSortedSimilarity", strings, setPairs,
+        Seq(StringType, strings))(JaccardSortedSimilarity(_, _)),
+      binary("IntersectCountSorted", strings, setPairs,
+        Seq(strings, StringType))(IntersectCountSorted(_, _)),
+      unary("EditSegmentKeys(index)", StringType, texts, strings)(
+        EditSegmentKeys(_, 1, probe = false)),
+      unary("EditSegmentKeys(probe)", StringType, texts, strings)(
+        EditSegmentKeys(_, 2, probe = true)),
+      unary("WordShingles", StringType, texts, strings)(WordShingles(_, 2)),
+      unary("WordShingles(n=1)", StringType, texts, IntegerType)(
+        WordShingles(_, 1)),
+      unary("CharEntropy", StringType, texts, BinaryType)(CharEntropy(_)),
+      unary("PositionalWordShingles", StringType, texts, strings)(
+        PositionalWordShingles(_, 2)),
+      unary("CompressionRatio", StringType, texts, DoubleType)(
+        CompressionRatio(_)),
+      unary("Md5Prefix64", StringType, texts, LongType)(Md5Prefix64(_, 8)),
+      ParityCase("SketchQuantiles", Seq(BinaryType, ArrayType(DoubleType)),
+        es => SketchQuantiles(es(0), es(1)),
+        Seq(Seq(null, probs(0.5)), Seq(sketch(1.0), null),
+          Seq(sketch(1.0, 2.0), probs()), Seq(sketch(), probs(0.5)),
+          Seq(sketch(3.0, 1.0, 2.0), probs(0.0, 0.5, 1.0, Double.NaN)),
+          Seq(sketch(1.0, Double.NaN), probs(0.25, 0.75)),
+          Seq(sketch((1 to 40).map(_.toDouble): _*), probs(0.1, 0.9))),
+        Seq(BinaryType, ArrayType(FloatType))))
+  }
+
+  test("every scalar expression: interpreted and generated projections " +
+    "agree on null, empty, mismatched, all-zero, NaN and ordinary rows") {
+    parityCases.foreach { c =>
+      val inputs = c.types.zipWithIndex.map { case (t, i) =>
+        BoundReference(i, t, nullable = true) }
+      val e = c.build(inputs)
+      assert(e.checkInputDataTypes().isSuccess, c.name)
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(e))
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      c.rows.foreach { r =>
+        val row = InternalRow.fromSeq(r)
+        val a = interpreted(row).copy()
+        val b = generated(row).copy()
+        assert(a == b, s"${c.name} on ${r.mkString("(", ", ", ")")}: " +
+          s"interpreted ${a.get(0, e.dataType)} vs generated " +
+          s"${b.get(0, e.dataType)}")
+      }
+    }
+  }
+
+  test("every scalar expression rejects a wrong-typed input at analysis") {
+    val ok = Map[DataType, org.apache.spark.sql.Column](
+      StringType -> lit("x"), LongType -> lit(1L), IntegerType -> lit(1),
+      DoubleType -> lit(1.0), BinaryType -> lit(Array[Byte](1)),
+      ArrayType(FloatType) -> array(lit(1f)),
+      ArrayType(DoubleType) -> array(lit(1.0)),
+      ArrayType(IntegerType) -> array(lit(1)),
+      ArrayType(LongType) -> array(lit(1L)),
+      ArrayType(StringType) -> array(lit("x")))
+    val one = spark.range(1).toDF()
+    parityCases.foreach { c =>
+      val e = c.build(c.wrong.map(t => Shims.expression(ok(t))))
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        one.select(Shims.column(e)))
+      assert(err.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+        s"${c.name}: ${err.getMessage}")
+    }
+  }
+
+  test("every aggregate rejects a wrong-typed input at analysis") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate
+      .AggregateFunction
+    val d = Shims.expression(lit(1.5))
+    val l = Shims.expression(lit(1L))
+    val aggs: Seq[(String, AggregateFunction)] = Seq(
+      "QuantileSketchAgg" -> QuantileSketchAgg(Shims.expression(lit("x")), 8),
+      "QuantileSketchUnion" -> QuantileSketchUnion(l),
+      "PortableMinHashAgg" -> PortableMinHashAgg(d, Seq((1L, 2L)), 7L),
+      "OphMinHashAgg" -> OphMinHashAgg(d, 4, 1L << 40),
+      "CountMinCounters" -> CountMinCounters(l, 2, 8),
+      "MisraGriesCandidates" -> MisraGriesCandidates(d, 4),
+      "DistinctUpTo" -> DistinctUpTo(d, 4),
+      "DivergenceCounters" -> DivergenceCounters(l, Seq("a"), Seq(0.5, 0.5)))
+    aggs.foreach { case (name, f) =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).agg(Shims.column(f.toAggregateExpression())))
+      assert(err.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+        s"$name: ${err.getMessage}")
+    }
   }
 }

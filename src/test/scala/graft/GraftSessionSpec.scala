@@ -91,6 +91,19 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"checkpoint outside operators.Pin: $offenders")
   }
 
+  test("expressions declare input types and emit no generated loops") {
+    // input types come from Spark's ExpectsInputTypes; a row kernel is a
+    // static Scala method that eval and doGenCode both call, so Java
+    // loop syntax can only mean a kernel copied into a codegen string
+    val banned = Seq("checkInputDataTypes", "for (int ")
+    val offenders = mainSources.flatMap { p =>
+      val c = code(Files.readString(p))
+      banned.filter(c.contains).map(b => s"$p: $b")
+    }
+    assert(offenders.isEmpty, s"hand-written type check or codegen loop: " +
+      offenders.mkString("; "))
+  }
+
   test("src/main reads only the four SPARK_GRAFT_* options") {
     val names = mainSources.flatMap(p =>
       "SPARK_GRAFT_[A-Z_]+".r.findAllIn(Files.readString(p))).toSet

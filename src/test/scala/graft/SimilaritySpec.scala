@@ -215,6 +215,55 @@ class SimilaritySpec extends SparkTestBase {
     assert(recall >= 0.3, s"ADC recall@10 = $recall")
   }
 
+  test("PQ train, encode and reconstruction error at m = 16, k = 16 run " +
+    "compiled (codegen fallback off)") {
+    // with the fallback off, a stage whose generated code fails to
+    // compile throws instead of silently running interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val books = Similarity.trainPq(emb, "vec_id", "embedding",
+        dim = 64, m = 16, k = 16, iterations = 2)
+      assert(books.centroids.length == 16 &&
+        books.centroids.forall(_.length == 16))
+      val enc = Similarity.encodePq(emb, "embedding", books)
+      val err = Similarity.pqReconstructionError(enc, "embedding", books)
+      // the same mean recomputed on the driver from the collected codes
+      val rows = enc.select("embedding", "pq_code").collect()
+      val want = rows.map { r =>
+        val v = r.getSeq[Float](0)
+        val code = r.getSeq[Int](1)
+        (0 until 16).map { s =>
+          val c = books.centroids(s)(code(s))
+          (0 until 4).map { i =>
+            val d = v(s * 4 + i).toDouble - c(i).toDouble; d * d
+          }.sum
+        }.sum
+      }.sum / rows.length
+      assert(math.abs(err - want) <= 1e-9 * math.max(1.0, want),
+        s"reconstruction error $err, driver-side $want")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a training call that fails releases the frame it cached") {
+    val bad = emb.withColumn("embedding",
+      when(col("vec_id") === 5, raise_error(lit("bad vector")))
+        .otherwise(col("embedding")))
+    // only NEW entries count: the context cleaner may drop older ones
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    intercept[Exception](Similarity.trainPq(bad, "vec_id", "embedding",
+      dim = 64, m = 4, k = 4, iterations = 1))
+    assert((persisted -- before).isEmpty, "trainPq left its frame cached")
+    intercept[Exception](Similarity.buildIvf(spark, bad, "vec_id",
+      "embedding", nCentroids = 4, iterations = 1))
+    assert((persisted -- before).isEmpty, "buildIvf left its frame cached")
+  }
+
   test("IVF-PQ: pruned + quantized probe still finds near neighbors") {
     val (ivf, books, encoded) = Similarity.buildIvfPq(
       spark, emb, "vec_id", "embedding",
