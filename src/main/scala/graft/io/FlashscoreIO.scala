@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import graft.schema.Flashscore
 
 /** Sources/sinks for the Flashscore pipeline.
@@ -13,15 +13,18 @@ import graft.schema.Flashscore
   */
 object FlashscoreIO {
 
-  /** Batch JSON source. PERMISSIVE + explicit schema: malformed records
-    * become null-field rows instead of failing the batch — the engine-side
-    * fix for the reference's crash-on-bad-record behavior. */
-  def readJson(spark: SparkSession, path: String): DataFrame =
+  /** The batch JSON reader. PERMISSIVE + explicit schema: malformed
+    * records become null-field rows instead of failing the batch — the
+    * engine-side fix for the reference's crash-on-bad-record behavior. */
+  private def jsonReader(spark: SparkSession): DataFrameReader =
     spark.read
       .schema(Flashscore.inputSchema)
       .option("mode", "PERMISSIVE")
       .option("multiLine", "true") // one file = one JSON array (utils.py:81)
-      .json(path)
+
+  /** Batch JSON source over every file under `path`. */
+  def readJson(spark: SparkSession, path: String): DataFrame =
+    jsonReader(spark).json(path)
 
   /** Batch JSON source restricted to files modified after `since` — the
     * batch analogue of the reference's date-filtered discovery
@@ -37,10 +40,7 @@ object FlashscoreIO {
   def readJsonModifiedAfter(
       spark: SparkSession, path: String,
       since: java.time.Instant): DataFrame =
-    spark.read
-      .schema(Flashscore.inputSchema)
-      .option("mode", "PERMISSIVE")
-      .option("multiLine", "true")
+    jsonReader(spark)
       .option("modifiedAfter",
         java.time.format.DateTimeFormatter
           .ofPattern("yyyy-MM-dd'T'HH:mm:ss")
