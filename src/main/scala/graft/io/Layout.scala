@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -150,27 +151,77 @@ object Layout {
     * ceil(bytes / targetFileBytes) files. Streaming sinks and per-batch
     * appends accumulate tiny files; at scale the scan's task-per-file
     * overhead dominates — compaction restores healthy file sizes.
-    * Writes to `path + ".compact"` then swaps atomically-enough for a
-    * local filesystem (object stores would write-then-repoint a manifest).
+    * The rewrite goes through [[replace]], so it works on any Hadoop
+    * path and a crash mid-swap is recovered by the next call.
     */
   def compact(
       spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val dir = new java.io.File(path)
-    val bytes = Option(dir.listFiles()).map(
-      _.filter(_.getName.endsWith(".parquet")).map(_.length()).sum)
-      .getOrElse(0L)
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val tmp = path + ".compact"
-    spark.read.parquet(path).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val old = new java.io.File(path)
-    val backup = new java.io.File(path + ".old")
-    old.renameTo(backup)
-    new java.io.File(tmp).renameTo(old)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    replace(spark, path) { tmp =>
+      val live = new Path(path)
+      val bytes = fileSystem(spark, live).getContentSummary(live).getLength
+      val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+      spark.read.parquet(path).repartition(nFiles)
+        .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    rm(backup)
+
+  /** Replace `path` with what `write` writes to the path it is handed,
+    * `<path>.compact`, on any Hadoop filesystem (`file:`, `hdfs:`, ...):
+    * [[recover]] first, then `write`, then rename live → `<path>.bak`
+    * (when live exists), `.compact` → live, and delete `.bak`. Every
+    * rename is checked — it throws if it fails or if its target exists —
+    * so a failed swap fails the caller (a streaming batch then replays)
+    * instead of committing against a half-swapped path. `write` runs
+    * after recovery, so it may read the live path.
+    *
+    * SINGLE-ACCESSOR CONTRACT: `path` and its two siblings belong to one
+    * writer. Live is briefly ABSENT between the two renames, and a crash
+    * inside that window is repaired only by the next [[recover]] or
+    * `replace` on the path; a concurrent reader can see the path missing
+    * (or a stale `.bak` state), and a second writer's recovery would
+    * delete the first writer's `.compact`. Read such a path only while
+    * its writer is stopped.
+    */
+  def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    recover(spark, path)
+    val live = new Path(path)
+    val fs = fileSystem(spark, live)
+    val (bak, compact) = siblings(live)
+    write(compact.toString)
+    if (fs.exists(live)) move(fs, live, bak)
+    move(fs, compact, live)
+    fs.delete(bak, true)
+    ()
   }
+
+  /** The one crash state machine for [[replace]], which moves live away
+    * only after `.compact` is fully written:
+    *
+    *  - live exists: any `.bak`/`.compact` is stale — delete both;
+    *  - `.bak` and `.compact`: the write finished — promote `.compact`,
+    *    delete `.bak`;
+    *  - `.bak` only: restore it;
+    *  - `.compact` only: a first write that died, possibly partial —
+    *    delete it.
+    */
+  def recover(spark: SparkSession, path: String): Unit = {
+    val live = new Path(path)
+    val fs = fileSystem(spark, live)
+    val (bak, compact) = siblings(live)
+    if (!fs.exists(live) && fs.exists(bak))
+      move(fs, if (fs.exists(compact)) compact else bak, live)
+    fs.delete(bak, true)
+    fs.delete(compact, true)
+    ()
+  }
+
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def siblings(live: Path): (Path, Path) =
+    (new Path(s"$live.bak"), new Path(s"$live.compact"))
+
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (fs.exists(to) || !fs.rename(from, to))
+      throw new IllegalStateException(s"could not rename $from to $to")
 }

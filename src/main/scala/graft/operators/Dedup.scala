@@ -489,9 +489,9 @@ object Dedup {
       idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
-    incrementalFromBuckets(
+    incrementalNearDupsFromBuckets(
       minhashBuckets(newDocs, idCol, textCol, numHashes, bands, shingleSize),
-      oldBuckets, newDocs, oldDocs, idCol, textCol,
+      newDocs, oldDocs, oldBuckets, idCol, textCol,
       shingleSize, threshold, maxBucketSize)
 
   /** Incremental near-dup for the OPH sketch family (see
@@ -508,41 +508,33 @@ object Dedup {
       idCol: String, textCol: String,
       numSlots: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
-    incrementalFromBuckets(
+    incrementalNearDupsFromBuckets(
       ophPortableBuckets(newDocs, idCol, textCol, numSlots, bands, shingleSize),
-      oldBuckets, newDocs, oldDocs, idCol, textCol,
+      newDocs, oldDocs, oldBuckets, idCol, textCol,
       shingleSize, threshold, maxBucketSize)
 
-  /** Buckets-level incremental entry: same contract as
-    * [[incrementalOphNearDups]]/[[incrementalMinhashNearDups]] but the
-    * NEW batch's buckets are supplied by the caller — for callers that
-    * already computed them (e.g. a streaming sink that reuses ONE
-    * bucket pass for internal dedup, the cross-check, and the index
-    * append) so the sketch pass is not re-paid per use. `newBuckets`
-    * must cover exactly `newDocs` under the same family/parameters as
-    * the persisted index (the `__bucket` type guard catches a
-    * format-level mismatch; parameter drift within the same type is
-    * the caller's contract). */
+  /** Buckets-level incremental entry, shared by every bucket family:
+    * same contract as [[incrementalOphNearDups]]/
+    * [[incrementalMinhashNearDups]] but the NEW batch's buckets are
+    * supplied by the caller — for callers that already computed them
+    * (e.g. a streaming sink that reuses ONE bucket pass for internal
+    * dedup, the cross-check, and the index append) so the sketch pass is
+    * not re-paid per use. `newBuckets` must cover exactly `newDocs` under
+    * the same family/parameters as the persisted index (the `__bucket`
+    * type guard catches a format-level mismatch; parameter drift within
+    * the same type is the caller's contract).
+    *
+    * Candidates = (new × new) within the batch plus (new × old) via an
+    * equi-join of the batch's buckets against the persisted index, then
+    * the exact Jaccard verify over old ∪ new texts. Old buckets above
+    * `maxBucketSize` drop via a semi-join against their counts (the LSH
+    * skew guardrail). */
   def incrementalNearDupsFromBuckets(
       newBuckets: DataFrame, newDocs: DataFrame,
       oldDocs: DataFrame, oldBuckets: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.8,
-      maxBucketSize: Int = 1000): DataFrame =
-    incrementalFromBuckets(newBuckets, oldBuckets, newDocs, oldDocs,
-      idCol, textCol, shingleSize, threshold, maxBucketSize)
-
-  /** Shared incremental tail over any bucket family: candidates =
-    * (new × new) within the batch plus (new × old) via an equi-join of
-    * the batch's buckets against the persisted index, then the exact
-    * Jaccard verify over old ∪ new texts. Old buckets above
-    * `maxBucketSize` drop via a semi-join against their counts (the LSH
-    * skew guardrail). */
-  private def incrementalFromBuckets(
-      newBuckets: DataFrame, oldBuckets: DataFrame,
-      newDocs: DataFrame, oldDocs: DataFrame,
-      idCol: String, textCol: String,
-      shingleSize: Int, threshold: Double, maxBucketSize: Int): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     // Bucket-format guard: the persisted index and the new batch MUST
     // carry the same __bucket type. The portable chains changed their
     // bucket representation (32-char md5 hex string → 60-bit md5-prefix

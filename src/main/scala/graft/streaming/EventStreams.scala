@@ -1,9 +1,12 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import graft.io.Layout
 
 /** Structured Streaming operators over the `events` table contract
   * (event_id, ts, user_id, event_type, value, props).
@@ -55,7 +58,7 @@ object EventStreams {
     // FileSystem API: partitioned (nested-dir) layouts and non-local
     // schemes (hdfs://, s3a://) count as data too — a top-level
     // java.io.File scan would silently treat both as empty.
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(path) && fs.getFileStatus(path).isDirectory,
       s"events stream dir does not exist: $dir")
@@ -70,7 +73,7 @@ object EventStreams {
     // paths) so the walk stops at `dir` — components ABOVE it may
     // legitimately be dot-dirs and must not disqualify anything
     val root = fs.makeQualified(path)
-    def visible(leaf: org.apache.hadoop.fs.Path): Boolean = {
+    def visible(leaf: Path): Boolean = {
       var p = leaf
       while (p != null && p != root) {
         val n = p.getName
@@ -439,9 +442,11 @@ object EventStreams {
     * a parquet snapshot via foreachBatch — updated keys replace, new keys
     * append, so a REPLAYED batch (restart, at-least-once upstream)
     * converges to the same table instead of duplicating rows: idempotent
-    * merge + checkpointed source offsets = effectively-once. The local
-    * write-then-swap stands in for a table format's transactional commit
-    * (Delta/Iceberg MERGE on a cluster); the merge itself
+    * merge + checkpointed source offsets = effectively-once. Each batch
+    * rewrites the snapshot through [[graft.io.Layout.replace]] (any
+    * Hadoop path; checked renames, crash recovery), which stands in for a
+    * table format's transactional commit (Delta/Iceberg MERGE on a
+    * cluster); the merge itself
     * ([[graft.operators.Upsert.mergeByKey]]) is one anti-join + union,
     * shuffle-on-key at any scale. Latest-wins INSIDE a batch is resolved
     * deterministically: highest `seqCol` wins per key, and a (key, seqCol)
@@ -476,142 +481,23 @@ object EventStreams {
         val latest = batch
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-        val dir = new java.io.File(path)
-        val bak = new java.io.File(path + ".bak")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+        // the keyed merge is idempotent, so a batch replayed after a
+        // crash converges whichever side of the swap the crash hit
+        Layout.replace(spark, path) { tmp =>
+          val merged =
+            if (exists(spark, path)) graft.operators.Upsert.mergeByKey(
+              spark.read.parquet(path), latest, keys)
+            else latest
+          merged.write.mode("overwrite").parquet(tmp)
         }
-        // crash recovery: a previous batch may have died between the two
-        // renames (snapshot moved to .bak, tmp not yet promoted) — restore
-        // the backup so the replayed batch merges against real history
-        if (!dir.exists() && bak.exists())
-          require(bak.renameTo(dir), s"could not restore $bak")
-        val merged =
-          if (dir.exists()) graft.operators.Upsert.mergeByKey(
-            spark.read.parquet(path), latest, keys)
-          else latest
-        val tmp = path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        // every rename result is CHECKED: a failed swap must throw so the
-        // batch is NOT committed and replays, instead of silently dropping
-        // the merge while the checkpoint advances
-        if (bak.exists()) rm(bak)
-        if (dir.exists())
-          require(dir.renameTo(bak), s"could not stage $path for swap")
-        require(new java.io.File(tmp).renameTo(dir),
-          s"could not promote $tmp")
-        rm(bak)
       }
       .start()
 
-  /** Streaming NEAR-dup filter — the continuous-ingest dedup shape: each
-    * micro-batch of documents is (1) internally deduplicated (OPH
-    * MinHash-LSH pairs → connected components → keep-one representative)
-    * and (2) checked against a PERSISTED bucket index of everything
-    * already accepted; a new doc that near-matches an accepted doc is
-    * dropped (first-accepted-wins). Survivors are appended to the output,
-    * and their buckets + texts are appended to the index state — so
-    * per-batch cost scales with the BATCH, never the accumulated corpus
-    * (the [[graft.operators.Dedup.incrementalOphNearDups]] argument).
-    *
-    * State layout under `statePath`: `buckets.parquet` (the LSH index —
-    * (id, __band, __bucket), equi-joinable at any scale) and
-    * `docs.parquet` ((id, text) for the exact-Jaccard verify of
-    * candidate pairs only). Both are APPEND-only on the batch path: no
-    * batch rewrites corpus-sized state as part of processing. Index
-    * MAINTENANCE is separate and threshold-triggered: once a dir
-    * accumulates more than `compactIndexAboveFiles` parquet data files
-    * (one fragment set lands per batch — at continuous ingest that is
-    * thousands of small files, the classic listing/open-cost killer for
-    * exactly the reads every batch pays), it is compacted into ~128 MB
-    * files and atomically swapped ([[compactIndexDir]]), with crash
-    * recovery on restart ([[recoverIndexDir]]).
-    *
-    * Delivery: at-least-once on the output (a batch replayed after a
-    * crash re-appends its survivors — replay recomputes the SAME
-    * survivor set, because a doc's own index entries are excluded by id
-    * equality, so duplicates are exact row-level copies a downstream
-    * exact dedup or [[mergeSink]]-style keyed merge removes; duplicate
-    * index entries only inflate bucket counts toward the maxBucketSize
-    * guardrail, never change candidate pairs, which are distinct).
-    *
-    * Policy notes: batch-internal clusters keep their MIN id (the
-    * [[graft.operators.Dedup.keepClusterRepresentatives]] contract);
-    * recall is the LSH operating point's (raise bands for more).
-    *
-    * SINGLE-ACCESSOR CONTRACT (ADVICE r13): `statePath` is owned
-    * exclusively by this sink. The compaction swap renames the live
-    * index dir away (`live → .bak`) before promoting the rewrite
-    * (`.compact → live`), so the live path is briefly ABSENT
-    * mid-swap, and recovery from a crash inside that window runs only
-    * at this sink's next `foreachBatch`. An ad-hoc query or second
-    * job reading `statePath` concurrently can therefore see a missing
-    * directory (or, after a crash, a stale `.bak` state) — query the
-    * OUTPUT (`outPath`) instead, or stop the stream first. Structured
-    * Streaming's own checkpoint contract already forbids two writers
-    * on one `checkpoint`; this extends the exclusivity to the state
-    * dirs the checkpoint describes. */
-  /** Crash recovery for [[compactIndexDir]]'s swap: the compacted
-    * rewrite (`<dir>.compact`) is only ever renamed into place AFTER its
-    * write completed, so on restart the state machine is unambiguous —
-    * if the live dir exists, any leftover `.compact`/`.bak` is stale
-    * and deleted; if only `.compact` exists the swap is completed
-    * (promote it, drop the backup); if only `.bak` exists the swap is
-    * undone (restore it). Runs through the Hadoop FileSystem API like
-    * every other state access of the sink. */
-  private def recoverIndexDir(
-      hconf: org.apache.hadoop.conf.Configuration, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(hconf)
-    val bak = new org.apache.hadoop.fs.Path(dir + ".bak")
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact")
-    if (fs.exists(p)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(bak)) fs.delete(bak, true)
-    } else if (fs.exists(tmp)) {
-      require(fs.rename(tmp, p), s"could not promote $tmp to $p")
-      if (fs.exists(bak)) fs.delete(bak, true)
-    } else if (fs.exists(bak)) {
-      require(fs.rename(bak, p), s"could not restore $bak to $p")
-    }
-    ()
-  }
-
-  /** Threshold-triggered compaction of one append-only index directory:
-    * when the parquet data-file count exceeds `maxDataFiles`, rewrite
-    * the directory into ~128 MB files and swap atomically
-    * (write `.compact` → rename live to `.bak` → promote `.compact` →
-    * drop `.bak`; every rename result is CHECKED so a failed swap
-    * throws and the batch replays instead of committing against a
-    * half-swapped index). Row set is preserved exactly — index reads
-    * are set-semantics, so filter behavior is identical before and
-    * after. The `_GRAFT_LSH_PARAMS` manifest lives in the PARENT state
-    * dir and is untouched. */
-  private def compactIndexDir(
-      spark: SparkSession,
-      hconf: org.apache.hadoop.conf.Configuration,
-      dir: String, maxDataFiles: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) return
-    val nData = fs.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (nData <= maxDataFiles) return
-    val bytes = fs.getContentSummary(p).getLength
-    val nFiles =
-      math.max(1, math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
-    val bak = new org.apache.hadoop.fs.Path(dir + ".bak")
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(dir).repartition(nFiles)
-      .write.mode("overwrite").parquet(dir + ".compact")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    require(fs.rename(p, bak), s"could not stage $p for compaction swap")
-    require(fs.rename(tmp, p), s"could not promote $tmp to $p")
-    fs.delete(bak, true)
-    ()
+  /** Whether `path` exists, asked through its Hadoop filesystem: a
+    * java.io.File check is always false for hdfs:// or s3a:// paths. */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Streaming DSIR quality gate: score each micro-batch's documents
@@ -676,6 +562,45 @@ object EventStreams {
         } finally { b.unpersist(); () }
       }.start()
 
+  /** Streaming NEAR-dup filter — the continuous-ingest dedup shape: each
+    * micro-batch of documents is (1) internally deduplicated (OPH
+    * MinHash-LSH pairs → connected components → keep-one representative)
+    * and (2) checked against a PERSISTED bucket index of everything
+    * already accepted; a new doc that near-matches an accepted doc is
+    * dropped (first-accepted-wins). Survivors are appended to the output,
+    * and their buckets + texts are appended to the index state — so
+    * per-batch cost scales with the BATCH, never the accumulated corpus
+    * (the [[graft.operators.Dedup.incrementalOphNearDups]] argument).
+    *
+    * State layout under `statePath`: `buckets.parquet` (the LSH index —
+    * (id, __band, __bucket), equi-joinable at any scale) and
+    * `docs.parquet` ((id, text) for the exact-Jaccard verify of
+    * candidate pairs only). Both are APPEND-only on the batch path: no
+    * batch rewrites corpus-sized state as part of processing. Index
+    * MAINTENANCE is separate and threshold-triggered: once a dir
+    * accumulates more than `compactIndexAboveFiles` parquet data files
+    * (one fragment set lands per batch — at continuous ingest that is
+    * thousands of small files, the classic listing/open-cost killer for
+    * exactly the reads every batch pays), it is compacted into ~128 MB
+    * files by [[graft.io.Layout.compact]]; every batch first runs
+    * [[graft.io.Layout.recover]] on both index dirs and the manifest.
+    *
+    * Delivery: at-least-once on the output (a batch replayed after a
+    * crash re-appends its survivors — replay recomputes the SAME
+    * survivor set, because a doc's own index entries are excluded by id
+    * equality, so duplicates are exact row-level copies a downstream
+    * exact dedup or [[mergeSink]]-style keyed merge removes; duplicate
+    * index entries only inflate bucket counts toward the maxBucketSize
+    * guardrail, never change candidate pairs, which are distinct).
+    *
+    * Policy notes: batch-internal clusters keep their MIN id (the
+    * [[graft.operators.Dedup.keepClusterRepresentatives]] contract);
+    * recall is the LSH operating point's (raise bands for more).
+    *
+    * SINGLE-ACCESSOR CONTRACT: `statePath` is owned exclusively by
+    * this sink — [[graft.io.Layout.replace]]'s contract, extended to the
+    * state dirs the checkpoint describes. Query the OUTPUT (`outPath`)
+    * instead, or stop the stream first. */
   def nearDupFilterSink(
       docs: DataFrame,
       outPath: String,
@@ -694,51 +619,33 @@ object EventStreams {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         import graft.operators.Dedup
         val spark = batch.sparkSession
-        // state lives behind the Hadoop FileSystem API, NOT java.io.File:
-        // a java.io existence check is always false for hdfs://-/s3a://-
-        // style state paths, which would silently disable the cross-batch
-        // check while the Spark appends kept working — same hazard class
-        // readEventStream documents for its landing-dir peek
         val hconf = spark.sparkContext.hadoopConfiguration
-        def fsExists(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).exists(hp)
-        }
         val bucketsDir = s"$statePath/buckets.parquet"
         val docsDir = s"$statePath/docs.parquet"
-        // finish/undo any compaction swap a crash interrupted BEFORE the
-        // index is read — see compactIndexDir for the swap protocol
-        recoverIndexDir(hconf, bucketsDir)
-        recoverIndexDir(hconf, docsDir)
+        val paramsFile = s"$statePath/_GRAFT_LSH_PARAMS"
+        // finish/undo any swap a crash interrupted BEFORE the state is read
+        Seq(bucketsDir, docsDir, paramsFile).foreach(Layout.recover(spark, _))
         // LSH parameters are part of the index format: a restart with
         // different bands/slots/shingles produces same-TYPE buckets that
         // match (near) nothing against the old index — invisible to the
         // __bucket type guard, so pin them in a manifest and fail fast.
-        val paramsFile = new org.apache.hadoop.fs.Path(
-          s"$statePath/_GRAFT_LSH_PARAMS")
         val params = s"oph,$numSlots,$bands,$shingleSize"
-        val pfs = paramsFile.getFileSystem(hconf)
-        val bucketsDirExists = fsExists(s"$statePath/buckets.parquet")
+        val pfs = new Path(paramsFile).getFileSystem(hconf)
+        val bucketsDirExists = exists(spark, bucketsDir)
         // Atomic manifest write: create-then-write leaves an EMPTY file
         // if the process dies between create and close, and every later
         // restart — even a correctly configured one — would then fail
         // the stored==params check with a misleading "built with params
-        // []". Write to a temp path and rename into place instead; the
-        // rename is atomic on HDFS/posix, so the manifest is either
-        // absent or complete.
-        def writeManifest(): Unit = {
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$statePath/._GRAFT_LSH_PARAMS.tmp")
-          val outS = pfs.create(tmp, true)
+        // []". Layout.replace renames the finished write into place, so
+        // the manifest is either absent or complete.
+        def writeManifest(): Unit = Layout.replace(spark, paramsFile) { tmp =>
+          val outS = pfs.create(new Path(tmp), true)
           try outS.write(params.getBytes("UTF-8")) finally outS.close()
-          if (pfs.exists(paramsFile)) pfs.delete(paramsFile, false)
-          require(pfs.rename(tmp, paramsFile),
-            s"could not move LSH-params manifest into place at $paramsFile")
         }
         val stored: Option[String] =
-          if (!pfs.exists(paramsFile)) None
+          if (!exists(spark, paramsFile)) None
           else {
-            val in = pfs.open(paramsFile)
+            val in = pfs.open(new Path(paramsFile))
             Some(try scala.io.Source.fromInputStream(in, "UTF-8")
               .mkString.trim finally in.close())
           }
@@ -798,7 +705,7 @@ object EventStreams {
             val repIds = reps.select(col(idCol))
             // (2) cross-check reps against the accepted-corpus index
             val survivors =
-              if (!fsExists(bucketsDir)) reps
+              if (!exists(spark, bucketsDir)) reps
               else {
                 val oldBuckets = spark.read.parquet(bucketsDir)
                 val oldDocs = spark.read.parquet(docsDir)
@@ -833,12 +740,18 @@ object EventStreams {
             // one parquet fragment set to both index dirs, and at
             // continuous ingest thousands of small files are the classic
             // listing/open-cost killer for exactly the reads every batch
-            // pays. Rewrite + atomic swap once the data-file count
-            // crosses the threshold; a compaction failure throws, the
-            // batch replays, and the recovery above makes the replay see
-            // a consistent index either way.
-            compactIndexDir(spark, hconf, bucketsDir, compactIndexAboveFiles)
-            compactIndexDir(spark, hconf, docsDir, compactIndexAboveFiles)
+            // pays. Compact once the data-file count crosses the
+            // threshold; a compaction failure throws, the batch replays,
+            // and the recovery above makes the replay see a consistent
+            // index either way.
+            Seq(bucketsDir, docsDir).foreach { dir =>
+              val p = new Path(dir)
+              val nData = p.getFileSystem(hconf).listStatus(p).count { f =>
+                val n = f.getPath.getName
+                f.isFile && !n.startsWith("_") && !n.startsWith(".")
+              }
+              if (nData > compactIndexAboveFiles) Layout.compact(spark, dir)
+            }
           }
         } finally {
           if (sv != null) sv.unpersist()

@@ -628,6 +628,43 @@ class EventStreamsSpec extends SparkTestBase {
     } finally q2.stop()
   }
 
+  test("mergeSink: a file: URI sink converges over two batches") {
+    val h = 3600L * 1000000000L
+    val root = Files.createTempDirectory("graft_merge_uri").toString
+    val src = s"$root/in"
+    Files.createDirectories(java.nio.file.Paths.get(src))
+    val sink = s"file:$root/snapshot"
+    def addBatch(n: String,
+        rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
+      val tmp = s"$root/$n"
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(tmp)
+      val f = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(f.toPath, java.nio.file.Paths.get(src, s"$n.parquet"))
+    }
+    def snapshot() = spark.read.parquet(sink)
+      .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
+    addBatch("b1", Seq(
+      (1L, h, 10L, "click", 1.0, "{}"),
+      (2L, h + 1, 11L, "view", 2.0, "{}")))
+    val q = EventStreams.mergeSink(
+      EventStreams.readEventStream(spark, src).drop("event_time"),
+      sink, Seq("event_id"), "ts", s"$root/ckpt")
+    try {
+      q.processAllAvailable()
+      assert(snapshot() == Map(1L -> 1.0, 2L -> 2.0))
+      addBatch("b2", Seq(
+        (2L, h + 10, 11L, "view", 9.0, "{}"),
+        (3L, h + 11, 12L, "purchase", 5.0, "{}")))
+      q.processAllAvailable()
+      assert(snapshot() == Map(1L -> 1.0, 2L -> 9.0, 3L -> 5.0))
+      assert(spark.read.parquet(sink).count() == 3)
+    } finally q.stop()
+    assert(!new java.io.File(s"$root/snapshot.bak").exists())
+    assert(!new java.io.File(s"$root/snapshot.compact").exists())
+  }
+
   test("mergeSink: a query killed MID-BATCH replays and converges") {
     // Harder than restart-at-boundary: the failure happens inside the
     // batch's own write action (a poison row throws while `merged` is

@@ -91,6 +91,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"checkpoint outside operators.Pin: $offenders")
   }
 
+  test("graft.io.Layout is the only place src/main renames a path") {
+    val banned = Seq("renameTo(", ".rename(")
+    val offenders = mainSources
+      .filterNot(_.endsWith(Paths.get("io", "Layout.scala")))
+      .filter(p => banned.exists(code(Files.readString(p)).contains))
+    assert(offenders.isEmpty, s"rename outside graft.io.Layout: $offenders")
+  }
+
   test("expressions declare input types and emit no generated loops") {
     // input types come from Spark's ExpectsInputTypes; a row kernel is a
     // static Scala method that eval and doGenCode both call, so Java

@@ -40,6 +40,58 @@ class LayoutSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$tmp/frag").count() == li.count())
   }
 
+  test("compaction of a file: URI path rewrites through the Hadoop " +
+      "filesystem and leaves no swap debris") {
+    val tmp = Files.createTempDirectory("graft_compact_uri").toString
+    val li = spark.read.parquet(s"$sf001/lineitem.parquet")
+    li.repartition(40).write.parquet(s"$tmp/frag")
+    def parquetFiles(p: String) = new java.io.File(p).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parquetFiles(s"$tmp/frag") == 40)
+    Layout.compact(spark, s"file:$tmp/frag",
+      targetFileBytes = 64L * 1024 * 1024)
+    assert(parquetFiles(s"$tmp/frag") == 1)
+    assert(!new java.io.File(s"$tmp/frag.compact").exists())
+    assert(!new java.io.File(s"$tmp/frag.bak").exists())
+    assert(spark.read.parquet(s"$tmp/frag").count() == li.count())
+  }
+
+  test("recover: every crash state of the swap ends in one live copy") {
+    val tmp = Files.createTempDirectory("graft_recover").toString
+    def put(dir: String, tag: String): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.writeString(java.nio.file.Paths.get(dir, "marker"), tag)
+    }
+    def tag(dir: String): Option[String] = {
+      val f = java.nio.file.Paths.get(dir, "marker")
+      if (Files.exists(f)) Some(Files.readString(f)) else None
+    }
+    // (live, .bak, .compact) present -> the live copy after recovery
+    val rows = Seq(
+      (true, true, true) -> Some("live"),
+      (false, true, true) -> Some("compact"),
+      (false, true, false) -> Some("bak"),
+      (false, false, true) -> None)
+    rows.zipWithIndex.foreach { case (((live, bak, compact), want), i) =>
+      val p = s"$tmp/row$i"
+      if (live) put(p, "live")
+      if (bak) put(s"$p.bak", "bak")
+      if (compact) put(s"$p.compact", "compact")
+      Layout.recover(spark, p)
+      assert(tag(p) == want, s"row $i")
+      assert(!Files.exists(java.nio.file.Paths.get(s"$p.bak")), s"row $i")
+      assert(!Files.exists(java.nio.file.Paths.get(s"$p.compact")), s"row $i")
+    }
+    // a rename whose target exists throws, and live stays in place
+    val p = s"$tmp/taken"
+    put(p, "live")
+    val err = intercept[IllegalStateException] {
+      Layout.replace(spark, p) { out => put(out, "new"); put(s"$p.bak", "other") }
+    }
+    assert(err.getMessage.contains(".bak"), err.getMessage)
+    assert(tag(p) == Some("live"))
+  }
+
   test("co-bucketed tables join without a shuffle") {
     val li = spark.read.parquet(s"$sf001/lineitem.parquet")
     val o = spark.read.parquet(s"$sf001/orders.parquet")
