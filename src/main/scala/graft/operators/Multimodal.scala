@@ -3,27 +3,30 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.awt.color.ColorSpace
+import javax.imageio.ImageIO
+import javax.imageio.metadata.IIOMetadata
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed per-partition in batches.
   *
   * The Spark side — schema, partition sizing, batch iteration shape,
-  * output contract — is real and tested, and so is the decode for the
-  * pure-JVM-decodable formats: [[decodePpm]] (binary PPM "P6"),
-  * [[decodeBmp]] (uncompressed 24-bit BMP), [[decodePng]] (baseline
-  * RGB/RGBA PNG via `java.util.zip.Inflater` + scanline unfilter),
-  * [[decodeGif]] (GIF87a/89a with a full LZW decoder, interlace, and
-  * animation metadata), and
-  * [[decodeWav]] (RIFF/WAVE PCM-16 audio), [[decodeAvi]]
-  * (uncompressed RIFF/AVI 24-bit DIB video, incl. real per-frame
-  * extraction via [[extractVideoFrames]]), and [[decodeImageIo]]
-  * (JPEG + TIFF through the JDK's own `javax.imageio` codecs) parse
-  * real payload bytes into real dimensions/durations/frames/features.
-  * Formats that need an external codec (H.264/MP4 video, MP3 — none
-  * available in this container) fall back to the clearly-marked
-  * [[decodeStub]]; swapping in a real codec (JNI/javacv, or a Python
-  * `mapInPandas` stage on a cluster with codecs) changes only that
-  * dispatch arm.
+  * output contract — is real and tested, and so is the decode of every
+  * format a JVM reads without an external codec: [[decodePpm]] (binary
+  * PPM "P6"), [[decodeImage]] (every other image type through the JDK's
+  * own `javax.imageio` readers — PNG, GIF incl. animation metadata,
+  * BMP, JPEG, TIFF — chosen by MIME type, size-checked before the
+  * raster is allocated), [[decodeWav]] (RIFF/WAVE PCM-16 audio) and
+  * [[decodeAvi]] (uncompressed RIFF/AVI 24-bit DIB video, incl. real
+  * per-frame extraction via [[extractVideoFrames]]) parse real payload
+  * bytes into real dimensions/durations/frames/features; MP3, H.264
+  * and MP4 yield real metadata from header walks. Sample decode that
+  * needs an external codec (H.264/MP4 video, MP3 — the JDK ships none
+  * of these) and any payload its decoder refuses fall back to the
+  * clearly-marked [[decodeStub]]; swapping in a real codec (JNI/javacv,
+  * or a Python `mapInPandas` stage on a cluster with codecs) changes
+  * only that dispatch arm.
   */
 object Multimodal {
 
@@ -49,11 +52,6 @@ object Multimodal {
   implicit private val decodedEnc: Encoder[DecodedMedia] =
     Encoders.product[DecodedMedia]
 
-  /** Binary PPM ("P6") decode — pure JVM, no codec dependency. Header:
-    * `P6 <width> <height> <maxval>` as whitespace-separated ASCII tokens
-    * (with `#` comments), then raw RGB triplets. Feature (8-dim): mean
-    * R/G/B, mean/min/max luminance (Rec.601 weights), RMS luminance
-    * contrast, aspect ratio — all in [0,1]-ish ranges, deterministic. */
   /** Parsed P6 header → (width, height, maxval, pixelDataOffset).
     * Exactly ONE whitespace byte separates header from pixel data; long
     * arithmetic so adversarial w·h cannot overflow the length check. */
@@ -83,33 +81,59 @@ object Multimodal {
     }
   }
 
+  /** Binary PPM ("P6") decode — pure JVM, no codec dependency. Header:
+    * `P6 <width> <height> <maxval>` as whitespace-separated ASCII tokens
+    * (with `#` comments), then raw RGB triplets. Feature (8-dim): mean
+    * R/G/B, mean/min/max luminance (Rec.601 weights), RMS luminance
+    * contrast, aspect ratio — all in [0,1]-ish ranges, deterministic. */
   def decodePpm(
-      id: Long, bytes: Array[Byte]): Option[DecodedMedia] = {
-    ppmHeader(bytes) match {
-      case Some((w, h, maxval, data)) =>
-      var sr = 0.0; var sg = 0.0; var sb = 0.0
-      var sy = 0.0; var sy2 = 0.0
-      var minY = Double.MaxValue; var maxY = Double.MinValue
-      val n = w * h
-      var i = 0
-      while (i < n) {
-        val r = (bytes(data + i * 3) & 0xff).toDouble / maxval
-        val g = (bytes(data + i * 3 + 1) & 0xff).toDouble / maxval
-        val b = (bytes(data + i * 3 + 2) & 0xff).toDouble / maxval
-        val y = 0.299 * r + 0.587 * g + 0.114 * b
-        sr += r; sg += g; sb += b; sy += y; sy2 += y * y
-        if (y < minY) minY = y
-        if (y > maxY) maxY = y
-        i += 1
-      }
-      val meanY = sy / n
-      val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
-      Some(DecodedMedia(id, "image", w, h, 1, 0L,
-        Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-          meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-          (w.toDouble / h).toFloat)))
-      case _ => None
+      id: Long, bytes: Array[Byte]): Option[DecodedMedia] =
+    ppmHeader(bytes).map { case (w, h, maxval, data) =>
+      DecodedMedia(id, "image", w, h, 1, 0L,
+        imageFeature(w, h, maxval) { (y, row) =>
+          var x = 0; var o = data + y * w * 3
+          while (x < w) {
+            row(x) = ((bytes(o) & 0xff) << 16) |
+              ((bytes(o + 1) & 0xff) << 8) | (bytes(o + 2) & 0xff)
+            x += 1; o += 3
+          }
+        })
     }
+
+  /** The 8-dim feature of [[decodePpm]] over a `w`×`h` raster:
+    * `fillRow(y, row)` writes row y into `row` (length `w`), each pixel
+    * packed as 0xRRGGBB (higher bits ignored), and each channel is
+    * divided by `maxval`. Pixels accumulate in row-major order, so every
+    * decoder that yields the same pixels yields bit-identical features. */
+  private def imageFeature(w: Int, h: Int, maxval: Int)(
+      fillRow: (Int, Array[Int]) => Unit): Array[Float] = {
+    val row = new Array[Int](w)
+    var sr = 0.0; var sg = 0.0; var sb = 0.0
+    var sy = 0.0; var sy2 = 0.0
+    var minY = Double.MaxValue; var maxY = Double.MinValue
+    var y = 0
+    while (y < h) {
+      fillRow(y, row)
+      var x = 0
+      while (x < w) {
+        val p = row(x)
+        val r = ((p >> 16) & 0xff).toDouble / maxval
+        val g = ((p >> 8) & 0xff).toDouble / maxval
+        val b = (p & 0xff).toDouble / maxval
+        val lum = 0.299 * r + 0.587 * g + 0.114 * b
+        sr += r; sg += g; sb += b; sy += lum; sy2 += lum * lum
+        if (lum < minY) minY = lum
+        if (lum > maxY) maxY = lum
+        x += 1
+      }
+      y += 1
+    }
+    val n = w.toDouble * h
+    val meanY = sy / n
+    val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
+    Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
+      meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
+      (w.toDouble / h).toFloat)
   }
 
   /** REAL nearest-neighbor PPM resize: decode P6 → sample → re-encode
@@ -157,9 +181,7 @@ object Multimodal {
   def resizeImages(media: DataFrame, maxSide: Int): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"),
-      col("meta.source"), col("meta.mime"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions { rows =>
         rows.filter(_.kind == "image").map { r =>
           (r.media_id,
@@ -169,447 +191,104 @@ object Multimodal {
       .toDF("media_id", "payload")
   }
 
-  /** Uncompressed 24-bit BMP decode — pure JVM. BITMAPFILEHEADER ("BM",
-    * pixel-data offset at 10) + BITMAPINFOHEADER (dims at 18/22, 24 bpp,
-    * BI_RGB only); rows are BGR, 4-byte padded, bottom-up (negative
-    * height = top-down — row order doesn't change any of our aggregate
-    * features but both layouts parse). Same 8-dim feature contract as
-    * [[decodePpm]]. */
-  def decodeBmp(
-      id: Long, bytes: Array[Byte]): Option[DecodedMedia] = {
-    if (bytes == null || bytes.length < 54 ||
-      bytes(0) != 'B' || bytes(1) != 'M') return None
-    def u16(o: Int) = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def u32(o: Int) = (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    val dataOff = u32(10)
-    val w = u32(18).toInt
-    val hRaw = u32(22).toInt // signed: negative = top-down
-    val h = math.abs(hRaw)
-    if (u16(26) != 1 || u16(28) != 24 || u32(30) != 0L) return None
-    if (w <= 0 || h <= 0) return None
-    val rowSize = ((w.toLong * 3 + 3) / 4) * 4 // 4-byte padded
-    if (dataOff < 54 || dataOff + rowSize * h > bytes.length) return None
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    var sy = 0.0; var sy2 = 0.0
-    var minY = Double.MaxValue; var maxY = Double.MinValue
-    var row = 0
-    while (row < h) {
-      val base = dataOff + row * rowSize
-      var x = 0
-      while (x < w) {
-        val o = (base + x * 3).toInt // BGR order
-        val b = (bytes(o) & 0xff).toDouble / 255
-        val g = (bytes(o + 1) & 0xff).toDouble / 255
-        val r = (bytes(o + 2) & 0xff).toDouble / 255
-        val y = 0.299 * r + 0.587 * g + 0.114 * b
-        sr += r; sg += g; sb += b; sy += y; sy2 += y * y
-        if (y < minY) minY = y
-        if (y > maxY) maxY = y
-        x += 1
-      }
-      row += 1
-    }
-    val n = w.toLong * h
-    val meanY = sy / n
-    val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
-    Some(DecodedMedia(id, "image", w, h, 1, 0L,
-      Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-        meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-        (w.toDouble / h).toFloat)))
-  }
-
-  /** PNG decode — pure JVM (`java.util.zip.Inflater` + per-scanline
-    * unfilter), no codec dependency. Supports the baseline truecolor
-    * profile: 8-bit depth, color type 2 (RGB) or 6 (RGBA — alpha parsed
-    * but excluded from the features), compression 0, filter method 0,
-    * non-interlaced; ancillary chunks are skipped. All five scanline
-    * filters (None/Sub/Up/Average/Paeth) are implemented. Same 8-dim
-    * feature contract as [[decodePpm]] — identical pixels produce
-    * bit-identical features (MultimodalSpec asserts exact equality
-    * against the PPM decode of the same image). Truncated streams,
-    * corrupt chunk lengths, and absurd declared dimensions return None
-    * rather than throwing — a 100 TB batch must not abort on one blob. */
-  def decodePng(id: Long, bytes: Array[Byte]): Option[DecodedMedia] = {
-    if (bytes == null || bytes.length < 8 + 25 + 12 ||
-      !pngSig.indices.forall(i => bytes(i) == pngSig(i))) return None
-    def u32(o: Int): Long = ((bytes(o) & 0xffL) << 24) |
-      ((bytes(o + 1) & 0xffL) << 16) | ((bytes(o + 2) & 0xffL) << 8) |
-      (bytes(o + 3) & 0xffL)
-    var pos = 8
-    var w = 0; var h = 0; var bpp = 0
-    val idat = new java.io.ByteArrayOutputStream()
-    var ok = true; var done = false
-    while (ok && !done && pos + 8 <= bytes.length) {
-      val len = u32(pos)
-      // length check BEFORE use: a corrupt 0xFFFFFFFF length must not
-      // overflow pos or walk outside the buffer
-      if (len > bytes.length - pos - 12) { ok = false }
-      else {
-        val data = pos + 8
-        new String(bytes, pos + 4, 4, "US-ASCII") match {
-          case "IHDR" if len == 13 =>
-            w = u32(data).toInt; h = u32(data + 4).toInt
-            val depth = bytes(data + 8) & 0xff
-            bpp = (bytes(data + 9) & 0xff) match {
-              case 2 => 3 case 6 => 4 case _ => 0 // RGB / RGBA only
-            }
-            val comp = bytes(data + 10) & 0xff
-            val filt = bytes(data + 11) & 0xff
-            val inter = bytes(data + 12) & 0xff
-            if (w <= 0 || h <= 0 || depth != 8 || bpp == 0 ||
-              comp != 0 || filt != 0 || inter != 0) ok = false
-          case "IHDR" => ok = false
-          case "IDAT" => idat.write(bytes, data, len.toInt)
-          case "IEND" => done = true
-          case _ => () // ancillary chunk — skipped, CRC not validated
-        }
-        pos = data + len.toInt + 4
-      }
-    }
-    val stride = w.toLong * bpp
-    if (!ok || w <= 0 || idat.size() == 0 ||
-      (stride + 1) * h > Int.MaxValue - 64) return None
-    val raw = new Array[Byte](((stride + 1) * h).toInt)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    try {
-      var off = 0
-      while (off < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, off, raw.length - off)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          return None // truncated or preset-dictionary stream
-        off += n
-      }
-      if (off < raw.length) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inf.end()
-    // per-scanline unfilter into the flat pixel buffer; a/b/c are the
-    // RECONSTRUCTED left/up/up-left bytes per the PNG spec
-    val img = new Array[Byte]((stride * h).toInt)
-    val rowLen = stride.toInt
-    var y = 0
-    while (y < h) {
-      val rs = y * (rowLen + 1)
-      val ft = raw(rs) & 0xff
-      if (ft > 4) return None
-      val out = y * rowLen
-      var i = 0
-      while (i < rowLen) {
-        val x = raw(rs + 1 + i) & 0xff
-        val a = if (i >= bpp) img(out + i - bpp) & 0xff else 0
-        val b = if (y > 0) img(out - rowLen + i) & 0xff else 0
-        val v = ft match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + b
-          case 3 => x + (a + b) / 2
-          case _ =>
-            val c = if (y > 0 && i >= bpp) img(out - rowLen + i - bpp) & 0xff
-              else 0
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b)
-            val pc = math.abs(p - c)
-            x + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-        }
-        img(out + i) = (v & 0xff).toByte
-        i += 1
-      }
-      y += 1
-    }
-    // identical accumulation order and weights as decodePpm (row-major,
-    // maxval 255) so PNG and PPM of the same pixels agree bit-for-bit
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    var sy = 0.0; var sy2 = 0.0
-    var minY = Double.MaxValue; var maxY = Double.MinValue
-    val n = w * h
-    var i = 0
-    while (i < n) {
-      val r = (img(i * bpp) & 0xff).toDouble / 255
-      val g = (img(i * bpp + 1) & 0xff).toDouble / 255
-      val b = (img(i * bpp + 2) & 0xff).toDouble / 255
-      val yy = 0.299 * r + 0.587 * g + 0.114 * b
-      sr += r; sg += g; sb += b; sy += yy; sy2 += yy * yy
-      if (yy < minY) minY = yy
-      if (yy > maxY) maxY = yy
-      i += 1
-    }
-    val meanY = sy / n
-    val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
-    Some(DecodedMedia(id, "image", w, h, 1, 0L,
-      Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-        meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-        (w.toDouble / h).toFloat)))
-  }
-
-  private val pngSig: Array[Byte] =
-    Array(137, 80, 78, 71, 13, 10, 26, 10).map(_.toByte)
-
-  /** GIF87a/89a decode — pure JVM, full LZW. Walks the block stream:
-    * logical screen descriptor + global color table, graphic-control
-    * extensions (frame delays), image descriptors (+ local color
-    * tables). The FIRST frame's raster is LZW-decoded (variable-width
-    * codes LSB-first, CLEAR/END handling, deferred-clear tolerant) and
-    * de-interlaced if flagged; the 8-dim feature uses the identical
-    * accumulation order and weights as [[decodePpm]], so a GIF and a PPM
-    * of the same pixels agree bit-for-bit. Later frames contribute
-    * metadata only: `n_frames` = image-descriptor count, `duration_ms` =
-    * Σ graphic-control delays (centiseconds × 10). Transparency is
-    * ignored (the transparent index's palette color is used) — features
-    * are over the raw first-frame raster, not a composited canvas. */
-  def decodeGif(id: Long, bytes: Array[Byte]): Option[DecodedMedia] = {
-    if (bytes == null || bytes.length < 13) return None
-    val sig = new String(bytes, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return None
-    def u16(o: Int) = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    val sw = u16(6); val sh = u16(8)
-    val packed = bytes(10) & 0xff
-    var pos = 13
-    var gct: Array[Int] = null
-    if ((packed & 0x80) != 0) {
-      val n = 2 << (packed & 7)
-      if (pos + 3 * n > bytes.length) return None
-      gct = Array.tabulate(n)(i =>
-        ((bytes(pos + 3 * i) & 0xff) << 16) |
-          ((bytes(pos + 3 * i + 1) & 0xff) << 8) |
-          (bytes(pos + 3 * i + 2) & 0xff))
-      pos += 3 * n
-    }
-    // sub-block walker: returns position after the 0x00 terminator, or
-    // -1 on truncation; optionally collects the concatenated payload
-    def subBlocks(start: Int, sink: java.io.ByteArrayOutputStream): Int = {
-      var p = start
-      while (p < bytes.length && (bytes(p) & 0xff) != 0) {
-        val n = bytes(p) & 0xff
-        if (p + 1 + n > bytes.length) return -1
-        if (sink != null) sink.write(bytes, p + 1, n)
-        p += 1 + n
-      }
-      if (p >= bytes.length) -1 else p + 1
-    }
-    var frames = 0; var durationMs = 0L
-    var firstPixels: Array[Int] = null // RGB of frame 1, row-major
-    var fw = 0; var fh = 0
-    var done = false
-    while (!done && pos < bytes.length) {
-      (bytes(pos) & 0xff) match {
-        case 0x3b => done = true // trailer
-        case 0x21 => // extension: label + sub-blocks
-          if (pos + 2 > bytes.length) return None
-          val label = bytes(pos + 1) & 0xff
-          if (label == 0xf9 && pos + 7 < bytes.length &&
-            (bytes(pos + 2) & 0xff) == 4)
-            durationMs += u16(pos + 4) * 10L // delay in centiseconds
-          pos = subBlocks(pos + 2, null)
-          if (pos < 0) return None
-        case 0x2c => // image descriptor
-          if (pos + 10 > bytes.length) return None
-          val iw = u16(pos + 5); val ih = u16(pos + 7)
-          val ip = bytes(pos + 9) & 0xff
-          val interlaced = (ip & 0x40) != 0
-          pos += 10
-          var pal = gct
-          if ((ip & 0x80) != 0) {
-            val n = 2 << (ip & 7)
-            if (pos + 3 * n > bytes.length) return None
-            pal = Array.tabulate(n)(i =>
-              ((bytes(pos + 3 * i) & 0xff) << 16) |
-                ((bytes(pos + 3 * i + 1) & 0xff) << 8) |
-                (bytes(pos + 3 * i + 2) & 0xff))
-            pos += 3 * n
-          }
-          if (pos >= bytes.length) return None
-          val minCode = bytes(pos) & 0xff
-          if (frames == 0) {
-            if (pal == null || minCode < 2 || minCode > 8 ||
-              iw <= 0 || ih <= 0 ||
-              iw.toLong * ih > Int.MaxValue - 64) return None
-            val data = new java.io.ByteArrayOutputStream()
-            pos = subBlocks(pos + 1, data)
-            if (pos < 0) return None
-            val idx = lzwDecode(data.toByteArray, minCode, iw * ih)
-            if (idx == null) return None
-            // de-interlace: four passes over destination rows
-            val rowOf: Int => Int =
-              if (!interlaced) y => y
-              else {
-                val order = new Array[Int](ih)
-                var k = 0
-                for (step <- Seq((0, 8), (4, 8), (2, 4), (1, 2));
-                     y <- step._1 until ih by step._2) {
-                  order(k) = y; k += 1
-                }
-                src => order(src)
-              }
-            firstPixels = new Array[Int](iw * ih)
-            var srcRow = 0
-            while (srcRow < ih) {
-              val dst = rowOf(srcRow) * iw
-              var x = 0
-              while (x < iw) {
-                val ci = idx(srcRow * iw + x)
-                if (ci >= pal.length) return None
-                firstPixels(dst + x) = pal(ci)
-                x += 1
-              }
-              srcRow += 1
-            }
-            fw = iw; fh = ih
-          } else {
-            pos = subBlocks(pos + 1, null)
-            if (pos < 0) return None
-          }
-          frames += 1
-        case _ => return None
-      }
-    }
-    if (firstPixels == null) return None
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    var sy = 0.0; var sy2 = 0.0
-    var minY = Double.MaxValue; var maxY = Double.MinValue
-    val n = fw * fh
-    var i = 0
-    while (i < n) {
-      val p = firstPixels(i)
-      val r = ((p >> 16) & 0xff).toDouble / 255
-      val g = ((p >> 8) & 0xff).toDouble / 255
-      val b = (p & 0xff).toDouble / 255
-      val yy = 0.299 * r + 0.587 * g + 0.114 * b
-      sr += r; sg += g; sb += b; sy += yy; sy2 += yy * yy
-      if (yy < minY) minY = yy
-      if (yy > maxY) maxY = yy
-      i += 1
-    }
-    val meanY = sy / n
-    val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
-    Some(DecodedMedia(id, "image", sw, sh, frames,
-      if (frames > 1) durationMs else 0L,
-      Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-        meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-        (fw.toDouble / fh).toFloat)))
-  }
-
-  /** GIF LZW decode: `data` = concatenated sub-block payload, codes
-    * LSB-first at variable width (minCode+1 .. 12). Dictionary as
-    * prefix/suffix arrays, strings emitted via stack unwind. Returns
-    * exactly `nPixels` indices, or null on any malformation. */
-  private def lzwDecode(
-      data: Array[Byte], minCode: Int, nPixels: Int): Array[Int] = {
-    val clear = 1 << minCode
-    val end = clear + 1
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Int](4096)
-    val out = new Array[Int](nPixels)
-    var outN = 0
-    var width = minCode + 1
-    var next = end + 1
-    var prev = -1
-    var acc = 0L; var accBits = 0; var bp = 0
-    val stack = new Array[Int](4096)
-    while (outN < nPixels) {
-      while (accBits < width && bp < data.length) {
-        acc |= (data(bp) & 0xffL) << accBits
-        accBits += 8; bp += 1
-      }
-      if (accBits < width) return null // ran out of codes
-      val code = (acc & ((1L << width) - 1)).toInt
-      acc >>>= width; accBits -= width
-      if (code == clear) {
-        width = minCode + 1; next = end + 1; prev = -1
-      } else if (code == end) {
-        return null // END before all pixels produced
-      } else {
-        // first-char of a dictionary string = walk prefixes to a literal
-        def firstOf(c0: Int): Int = {
-          var c = c0
-          while (c >= end + 1) c = prefix(c)
-          c
-        }
-        var sp = 0
-        var cur = code
-        if (prev == -1) {
-          if (code >= clear) return null // first code must be a literal
-        } else if (code == next) {
-          // KwKwK: string = dict[prev] ++ [firstOf(prev)] — push the
-          // trailing char FIRST (stack pops in reverse), then expand prev
-          stack(sp) = firstOf(prev); sp += 1
-          cur = prev
-        } else if (code > next) return null
-        while (cur >= end + 1) {
-          stack(sp) = suffix(cur); sp += 1
-          cur = prefix(cur)
-        }
-        stack(sp) = cur; sp += 1 // `cur` is the string's first char
-        if (outN + sp > nPixels) return null // overflows the raster
-        while (sp > 0) {
-          sp -= 1; out(outN) = stack(sp); outN += 1
-        }
-        if (prev != -1 && next < 4096) {
-          prefix(next) = prev; suffix(next) = cur
-          next += 1
-          if (next == (1 << width) && width < 12) width += 1
-        }
-        prev = code
-      }
-    }
-    out
-  }
-
   /** One-time ImageIO setup: disable the disk-backed stream cache so
     * executor threads never touch java.io.tmpdir (decode stays pure
     * in-memory per batch). */
-  private lazy val imageIoInit: Unit =
-    javax.imageio.ImageIO.setUseCache(false)
+  private lazy val imageIoInit: Unit = ImageIO.setUseCache(false)
 
-  /** JPEG/TIFF decode via the JDK's own `javax.imageio` codecs (part of
-    * Java SE since 1.4 / 9 — no external dependency, works headless).
-    * TIFF is lossless, so features are bit-identical to [[decodePpm]] of
-    * the same pixels; JPEG is lossy, so dimensions are exact but channel
-    * features carry codec quantization error (MultimodalSpec bounds it).
-    * Same 8-dim feature contract as [[decodePpm]]. Undecodable or
-    * absurdly-dimensioned payloads return None rather than throwing —
-    * a 100 TB batch must not abort on one malformed blob. */
-  def decodeImageIo(id: Long, bytes: Array[Byte]): Option[DecodedMedia] = {
-    if (bytes == null || bytes.length < 4) return None
+  /** Image decode through the JDK's own `javax.imageio` readers (part of
+    * Java SE, no external dependency, works headless). The reader is
+    * chosen by `mime` (`image/png`, `image/gif`, `image/bmp`,
+    * `image/jpeg`, `image/tiff`, …), so bytes of one format labelled as
+    * another are refused. The size the header declares is checked
+    * against a 64 MPix cap BEFORE the reader allocates the raster: a
+    * crafted header must not exhaust the executor's heap. As in
+    * `ImageIO.read`, the reader skips metadata (a PNG's compressed text
+    * chunks are never inflated) for every format but GIF, whose frame
+    * delays live there.
+    *
+    * Same 8-dim feature contract as [[decodePpm]]: a lossless format
+    * agrees bit for bit with the PPM of the same pixels; JPEG carries
+    * codec quantization error (MultimodalSpec bounds it). Color pixels
+    * come from `getRGB` (sRGB); a gray image's levels are read raw from
+    * its raster and scaled to 8 bits, since `getRGB` would map them
+    * through a gamma curve. GIF reports `n_frames` = frames in the
+    * stream, `duration_ms` = Σ graphic-control delays (centiseconds ×
+    * 10) when animated, `width`/`height` = the logical screen, and the
+    * features and aspect ratio of the first frame's raster (transparency
+    * ignored, no canvas compositing); every other format reports the
+    * first image, one frame, no duration. Undecodable payloads return
+    * None rather than throwing — a 100 TB batch must not abort on one
+    * malformed blob. */
+  def decodeImage(
+      id: Long, mime: String, bytes: Array[Byte]): Option[DecodedMedia] = {
+    if (mime == null || bytes == null) return None
+    // skipping metadata, the PNG reader stops at the first IDAT and
+    // decodes a truncated stream: the file must end with IEND
+    if (mime == "image/png" && !bytes.endsWith(pngEnd)) return None
     imageIoInit
+    val readers = ImageIO.getImageReadersByMIMEType(mime)
+    if (!readers.hasNext) return None
+    val reader = readers.next()
+    val gif = mime == "image/gif"
+    val in = ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))
     try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
-      val w = img.getWidth; val h = img.getHeight
-      // 64 MPix guard: a crafted header must not allocate a huge raster
+      // a MIME-chosen reader skips the signature check ImageIO.read does
+      if (!reader.getOriginatingProvider.canDecodeInput(in)) return None
+      reader.setInput(in, !gif, !gif) // GIF seeks back to count frames
+      val w = reader.getWidth(0); val h = reader.getHeight(0)
       if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
-      var sr = 0.0; var sg = 0.0; var sb = 0.0
-      var sy = 0.0; var sy2 = 0.0
-      var minY = Double.MaxValue; var maxY = Double.MinValue
-      val row = new Array[Int](w)
-      var y = 0
-      while (y < h) {
-        img.getRGB(0, y, w, 1, row, 0, w)
-        var x = 0
-        while (x < w) {
-          val p = row(x)
-          val r = ((p >> 16) & 0xff).toDouble / 255
-          val g = ((p >> 8) & 0xff).toDouble / 255
-          val b = (p & 0xff).toDouble / 255
-          val lum = 0.299 * r + 0.587 * g + 0.114 * b
-          sr += r; sg += g; sb += b; sy += lum; sy2 += lum * lum
-          if (lum < minY) minY = lum
-          if (lum > maxY) maxY = lum
-          x += 1
+      val img = reader.read(0)
+      val cm = img.getColorModel
+      val grayBits =
+        if (cm.getColorSpace.getType == ColorSpace.TYPE_GRAY)
+          cm.getComponentSize(0)
+        else 0
+      if (grayBits > 16) return None // float gray: no integer levels
+      val grayMax = (1 << grayBits) - 1
+      val feature = imageFeature(w, h, 255) { (y, row) =>
+        if (grayBits == 0) img.getRGB(0, y, w, 1, row, 0, w)
+        else {
+          img.getRaster.getSamples(0, y, w, 1, 0, row)
+          var x = 0
+          while (x < w) {
+            row(x) = (row(x) * 255 + grayMax / 2) / grayMax * 0x010101
+            x += 1
+          }
         }
-        y += 1
       }
-      val n = w.toDouble * h
-      val meanY = sy / n
-      val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
-      Some(DecodedMedia(id, "image", w, h, 1, 0L,
-        Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-          meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-          (w.toDouble / h).toFloat)))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      if (!gif) return Some(DecodedMedia(id, "image", w, h, 1, 0L, feature))
+      val frames = reader.getNumImages(true)
+      val delayCs =
+        if (frames <= 1) Nil
+        else (0 until frames).flatMap(i => nativeAttr(
+          reader.getImageMetadata(i), "GraphicControlExtension", "delayTime"))
+      val screen = reader.getStreamMetadata
+      def screenSide(attr: String, frameSide: Int): Int =
+        nativeAttr(screen, "LogicalScreenDescriptor", attr)
+          .fold(frameSide)(_.toInt)
+      Some(DecodedMedia(id, "image", screenSide("logicalScreenWidth", w),
+        screenSide("logicalScreenHeight", h), frames,
+        delayCs.map(_.toLong * 10).sum, feature))
+    } catch { case NonFatal(_) => None }
+    finally { reader.dispose(); if (in != null) in.close() }
   }
+
+  /** A PNG's last chunk: empty IEND and its CRC. */
+  private val pngEnd: Array[Byte] = Array(0, 0, 0, 0, 'I', 'E', 'N', 'D',
+    0xae, 0x42, 0x60, 0x82).map(_.toByte)
+
+  /** Attribute `attr` of the first `node` element in the native tree of
+    * `meta` (null when the stream carries none), if present. */
+  private def nativeAttr(
+      meta: IIOMetadata, node: String, attr: String): Option[String] =
+    Option(meta).flatMap(m => Option(m.getNativeMetadataFormatName).map(f =>
+      m.getAsTree(f).asInstanceOf[org.w3c.dom.Element]
+        .getElementsByTagName(node)))
+      .filter(_.getLength > 0)
+      .map(_.item(0).asInstanceOf[org.w3c.dom.Element].getAttribute(attr))
+      .filter(_.nonEmpty)
 
   /** RIFF/WAVE PCM-16 decode — pure JVM. Walks the chunk list to `fmt `
     * and `data`; duration from sample count / rate; feature (8-dim):
@@ -1033,33 +712,16 @@ object Multimodal {
     aviInfo(bytes).map { info =>
       val (off, _) = info.frames.head
       val (w, h, stride) = (info.w, info.h, info.stride)
-      var sr = 0.0; var sg = 0.0; var sb = 0.0
-      var sy = 0.0; var sy2 = 0.0
-      var minY = Double.MaxValue; var maxY = Double.MinValue
-      val n = w * h
-      var y = 0
-      while (y < h) {
-        val row = off + (h - 1 - y) * stride // bottom-up storage
-        var x = 0
-        while (x < w) {
-          val b = (bytes(row + x * 3) & 0xff).toDouble / 255
-          val g = (bytes(row + x * 3 + 1) & 0xff).toDouble / 255
-          val r = (bytes(row + x * 3 + 2) & 0xff).toDouble / 255
-          val lum = 0.299 * r + 0.587 * g + 0.114 * b
-          sr += r; sg += g; sb += b; sy += lum; sy2 += lum * lum
-          if (lum < minY) minY = lum
-          if (lum > maxY) maxY = lum
-          x += 1
-        }
-        y += 1
-      }
-      val meanY = sy / n
-      val contrast = math.sqrt(math.max(sy2 / n - meanY * meanY, 0.0))
       DecodedMedia(id, "video", w, h, info.frames.length,
         info.usPerFrame * info.frames.length / 1000L,
-        Array((sr / n).toFloat, (sg / n).toFloat, (sb / n).toFloat,
-          meanY.toFloat, minY.toFloat, maxY.toFloat, contrast.toFloat,
-          (w.toDouble / h).toFloat))
+        imageFeature(w, h, 255) { (y, row) =>
+          var x = 0; var o = off + (h - 1 - y) * stride // bottom-up BGR
+          while (x < w) {
+            row(x) = ((bytes(o + 2) & 0xff) << 16) |
+              ((bytes(o + 1) & 0xff) << 8) | (bytes(o) & 0xff)
+            x += 1; o += 3
+          }
+        })
     }
 
   /** k-th AVI frame re-encoded as P6 PPM (top-down RGB) — the video →
@@ -1099,9 +761,7 @@ object Multimodal {
     require(everyN >= 1, "everyN must be >= 1")
     val spark = media.sparkSession
     import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"),
-      col("meta.source"), col("meta.mime"))
-      .as[MediaRow]
+    mediaRows(media)
       .mapPartitions { rows =>
         rows.filter(_.kind == "video").flatMap { r =>
           aviInfo(r.payload).iterator.flatMap { info =>
@@ -1137,24 +797,20 @@ object Multimodal {
   /** Decode/feature-extract stage: batched per-partition iteration (the
     * Scala analogue of `mapInPandas` — one partition = one batch stream,
     * codec state initialized once per partition, not per row). Dispatch
-    * by mime: PPM and WAV payloads decode for real; codec-bound formats
+    * by mime: PPM through [[decodePpm]], every other `image/` type
+    * through [[decodeImage]] (the JDK readers), WAV and uncompressed AVI
+    * decode for real, MP3/H.264/MP4 yield real metadata; a payload its
+    * decoder refuses, a null or unknown mime, and codec-bound formats
     * fall back to the stub. */
-  def decode(media: DataFrame): Dataset[DecodedMedia] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"),
-      col("meta.source"), col("meta.mime"))
-      .as[MediaRow]
+  def decode(media: DataFrame): Dataset[DecodedMedia] =
+    mediaRows(media)
       .mapPartitions { rows =>
         // per-partition init (real impl: open codec context here, once)
         rows.map { r =>
           val real = r.mime match {
             case "image/x-portable-pixmap" => decodePpm(r.media_id, r.payload)
-            case "image/bmp" => decodeBmp(r.media_id, r.payload)
-            case "image/png" => decodePng(r.media_id, r.payload)
-            case "image/gif" => decodeGif(r.media_id, r.payload)
-            case "image/jpeg" | "image/tiff" =>
-              decodeImageIo(r.media_id, r.payload)
+            case m: String if m.startsWith("image/") =>
+              decodeImage(r.media_id, m, r.payload)
             case "audio/wav" => decodeWav(r.media_id, r.payload)
             case "audio/mpeg" => decodeMp3Meta(r.media_id, r.payload)
             case "video/avi" | "video/x-msvideo" =>
@@ -1167,7 +823,13 @@ object Multimodal {
           real.getOrElse(decodeStub(r.media_id, r.kind, r.payload))
         }
       }
-  }
+
+  /** The media table as typed rows: id, kind, payload and the two meta
+    * fields the batched stages dispatch on. */
+  private def mediaRows(media: DataFrame): Dataset[MediaRow] =
+    media.select(col("media_id"), col("kind"), col("payload"),
+      col("meta.source"), col("meta.mime"))
+      .as[MediaRow](Encoders.product[MediaRow])
 
   /** Frame sampling for video rows: every `everyN`-th frame index becomes
     * a row (explode of a generated index range) — the Spark-native shape
@@ -1209,10 +871,13 @@ object Multimodal {
     out.toByteArray
   }
 
+  private val pngSig: Array[Byte] =
+    Array(137, 80, 78, 71, 13, 10, 26, 10).map(_.toByte)
+
   /** Deterministic baseline PNG bytes (8-bit RGB, non-interlaced) — a
     * REAL image payload for tests. Scanline `y` is encoded with filter
-    * type `y % 5`, so a multi-row image exercises every unfilter path of
-    * [[decodePng]] (None/Sub/Up/Average/Paeth). */
+    * type `y % 5`, so a multi-row image exercises every unfilter path
+    * (None/Sub/Up/Average/Paeth) of the PNG reader [[decodeImage]] uses. */
   def pngBytes(w: Int, h: Int, pixel: (Int, Int) => (Int, Int, Int))
       : Array[Byte] = {
     val img = new Array[Byte](w * h * 3)
@@ -1274,8 +939,8 @@ object Multimodal {
     * literal codes with the code width tracked in decoder-sync (an
     * entry per emitted code after the first since CLEAR, width bump at
     * 2^width, CLEAR before the table fills) — so a multi-row image
-    * exercises variable-width reads and CLEAR handling in
-    * [[decodeGif]]. */
+    * exercises variable-width reads and CLEAR handling in the GIF reader
+    * [[decodeImage]] uses. */
   def gifBytes(w: Int, h: Int, pixel: (Int, Int) => (Int, Int, Int),
       interlaced: Boolean = false): Array[Byte] =
     gifAnimBytes(w, h, Seq(pixel), delayCs = 0, interlaced)
@@ -1444,7 +1109,7 @@ object Multimodal {
 
   /** Encode pixels through the JDK's ImageIO writers ("jpg" or "tiff") —
     * a REAL compressed-image payload for fixtures, produced by the same
-    * codec family [[decodeImageIo]] reads. */
+    * codec family [[decodeImage]] reads. */
   def imageIoBytes(format: String, w: Int, h: Int,
       pixel: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
     imageIoInit

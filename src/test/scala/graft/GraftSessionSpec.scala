@@ -99,6 +99,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"rename outside graft.io.Layout: $offenders")
   }
 
+  test("src/main never calls ImageIO.read") {
+    // ImageIO.read allocates the whole raster before anything can check
+    // the size its header declares; Multimodal.decodeImage checks first
+    val offenders = mainSources
+      .filter(p => code(Files.readString(p)).contains("ImageIO.read("))
+    assert(offenders.isEmpty, s"ImageIO.read in src/main: $offenders")
+  }
+
   test("expressions declare input types and emit no generated loops") {
     // input types come from Spark's ExpectsInputTypes; a row kernel is a
     // static Scala method that eval and doGenCode both call, so Java

@@ -93,7 +93,7 @@ class MultimodalSpec extends SparkTestBase {
     val px = Array(
       Array((255, 0, 0), (255, 0, 0), (255, 0, 0)),
       Array((0, 0, 255), (0, 0, 255), (0, 0, 255)))
-    val d = Multimodal.decodeBmp(8L, Multimodal.bmpBytes(px)).get
+    val d = Multimodal.decodeImage(8L, "image/bmp", Multimodal.bmpBytes(px)).get
     assert(d.width == 3 && d.height == 2 && d.kind == "image")
     assert(math.abs(d.feature(0) - 0.5f) < 1e-6) // mean R
     assert(math.abs(d.feature(1)) < 1e-6) // mean G
@@ -102,11 +102,11 @@ class MultimodalSpec extends SparkTestBase {
     // corrupt: declared dims exceeding the payload must refuse
     val corrupt = Multimodal.bmpBytes(px)
     corrupt(18) = 100 // width 100 with 2-row payload
-    assert(Multimodal.decodeBmp(9L, corrupt).isEmpty)
-    // 8-bpp (palette) BMPs are not parseable as 24-bit — refuse
+    assert(Multimodal.decodeImage(9L, "image/bmp", corrupt).isEmpty)
+    // corrupt: 8 bpp declared, but no palette and too few pixel bytes
     val pal = Multimodal.bmpBytes(px)
     pal(28) = 8
-    assert(Multimodal.decodeBmp(10L, pal).isEmpty)
+    assert(Multimodal.decodeImage(10L, "image/bmp", pal).isEmpty)
     // adversarial PPM dims that overflow Int in w*h*3 are rejected
     val bomb = "P6\n50000 50000\n255\n".getBytes("US-ASCII") ++
       Array.fill[Byte](300)(7)
@@ -118,35 +118,38 @@ class MultimodalSpec extends SparkTestBase {
     // so this image round-trips every unfilter path (incl. Paeth)
     val pix = (x: Int, y: Int) =>
       ((x * 37 + y * 11) % 256, (y * 53 + x) % 256, (x * y + 7) % 256)
-    val png = Multimodal.decodePng(1L, Multimodal.pngBytes(6, 7, pix)).get
+    val png = Multimodal.decodeImage(1L, "image/png",
+      Multimodal.pngBytes(6, 7, pix)).get
     val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(6, 7, pix)).get
     assert(png.width == 6 && png.height == 7)
     assert(png.feature.toSeq == ppm.feature.toSeq) // exact, not approx
     assert(png.kind == "image" && png.duration_ms == 0L)
     // single-row image (only filter 0) and single-pixel edge cases
-    val one = Multimodal.decodePng(2L, Multimodal.pngBytes(1, 1, pix)).get
+    val one = Multimodal.decodeImage(2L, "image/png",
+      Multimodal.pngBytes(1, 1, pix)).get
     assert(one.width == 1 && one.height == 1 && one.feature(7) == 1.0f)
   }
 
   test("PNG decode refuses corrupt and unsupported payloads") {
     val good = Multimodal.pngBytes(5, 4, (x, y) => (x * 50, y * 60, 30))
     // truncated IDAT (drop the tail incl. IEND): inflate can't fill
-    assert(Multimodal.decodePng(1L, good.dropRight(20)).isEmpty)
+    assert(Multimodal.decodeImage(1L, "image/png", good.dropRight(20)).isEmpty)
     // bad signature
     val badSig = good.clone(); badSig(0) = 'X'.toByte
-    assert(Multimodal.decodePng(2L, badSig).isEmpty)
-    // 16-bit depth is not baseline-supported: refuse, don't mis-decode
+    assert(Multimodal.decodeImage(2L, "image/png", badSig).isEmpty)
+    // corrupt: IHDR declares 16-bit depth, IDAT holds 8-bit rows
     val deep = good.clone(); deep(8 + 8 + 8) = 16.toByte
-    assert(Multimodal.decodePng(3L, deep).isEmpty)
-    // interlaced flag set
+    assert(Multimodal.decodeImage(3L, "image/png", deep).isEmpty)
+    // corrupt: IHDR declares Adam7 interlace, IDAT holds plain rows
     val inter = good.clone(); inter(8 + 8 + 12) = 1.toByte
-    assert(Multimodal.decodePng(4L, inter).isEmpty)
+    assert(Multimodal.decodeImage(4L, "image/png", inter).isEmpty)
     // corrupt chunk length must terminate, not loop or throw
     val corrupt = good.clone()
     corrupt(8) = -1; corrupt(9) = -1; corrupt(10) = -1; corrupt(11) = -1
-    assert(Multimodal.decodePng(5L, corrupt).isEmpty)
+    assert(Multimodal.decodeImage(5L, "image/png", corrupt).isEmpty)
     // garbage bytes
-    assert(Multimodal.decodePng(6L, Array[Byte](1, 2, 3)).isEmpty)
+    assert(Multimodal.decodeImage(6L, "image/png",
+      Array[Byte](1, 2, 3)).isEmpty)
   }
 
   test("PNG payloads decode for real through the batched pipeline") {
@@ -160,9 +163,90 @@ class MultimodalSpec extends SparkTestBase {
     // and the features equal a direct single-payload decode
     val row6 = media.filter(col("media_id") === 6)
       .select("payload").head().getAs[Array[Byte]](0)
-    val direct = Multimodal.decodePng(6L, row6).get
+    val direct = Multimodal.decodeImage(6L, "image/png", row6).get
     val staged = pngRows.find(_.media_id == 6L).get
     assert(direct.feature.toSeq == staged.feature.toSeq)
+  }
+
+  test("palette PNG decode is bit-identical to PPM decode of the same " +
+    "pixels") {
+    val pix = (x: Int, y: Int) => ((x * 60) % 256, (y * 90) % 256, 40)
+    val img = new java.awt.image.BufferedImage(5, 3,
+      java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
+    for (y <- 0 until 3; x <- 0 until 5) {
+      val (r, g, b) = pix(x, y)
+      img.setRGB(x, y, (r << 16) | (g << 8) | b)
+    }
+    // TYPE_BYTE_INDEXED maps each color to its nearest palette entry:
+    // the reference is the PPM of the pixels the palette really holds
+    val held = (x: Int, y: Int) => {
+      val p = img.getRGB(x, y)
+      ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", out))
+    val png = Multimodal.decodeImage(1L, "image/png", out.toByteArray).get
+    val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(5, 3, held)).get
+    assert(png.width == 5 && png.height == 3)
+    assert(png.feature.toSeq == ppm.feature.toSeq) // exact, not approx
+  }
+
+  test("gray images decode to the PPM of the same levels") {
+    // a gray image's levels are read raw: getRGB would gamma-map them
+    val level = (x: Int, y: Int) => (x * 28 + y * 5) % 256
+    val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(9, 6, (x, y) => {
+      val v = level(x, y); (v, v, v)
+    })).get
+    def encode(imgType: Int, scale: Int, format: String): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(9, 6, imgType)
+      for (y <- 0 until 6; x <- 0 until 9)
+        img.getRaster.setSample(x, y, 0, level(x, y) * scale)
+      val out = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, format, out), format)
+      out.toByteArray
+    }
+    import java.awt.image.BufferedImage.{TYPE_BYTE_GRAY, TYPE_USHORT_GRAY}
+    for ((imgType, scale, format, mime) <- Seq(
+      (TYPE_BYTE_GRAY, 1, "png", "image/png"),
+      (TYPE_USHORT_GRAY, 257, "png", "image/png"), // 16-bit levels
+      (TYPE_BYTE_GRAY, 1, "tiff", "image/tiff"),
+      (TYPE_BYTE_GRAY, 1, "bmp", "image/bmp"))) {
+      val d = Multimodal.decodeImage(1L, mime, encode(imgType, scale, format))
+      assert(d.map(_.feature.toSeq).contains(ppm.feature.toSeq),
+        s"$format x$scale") // exact, not approx
+    }
+    // JPEG: lossy, so means within codec tolerance of the same levels
+    val jpg = Multimodal.decodeImage(1L, "image/jpeg",
+      encode(TYPE_BYTE_GRAY, 1, "jpg")).get
+    assert(jpg.width == 9 && jpg.height == 6)
+    for (d <- 0 until 4)
+      assert(math.abs(jpg.feature(d) - ppm.feature(d)) < 0.05,
+        s"dim $d: ${jpg.feature(d)} vs ${ppm.feature(d)}")
+  }
+
+  test("multi-page TIFF reports its first page as one frame") {
+    val pages = Seq.tabulate(3)(p => {
+      val img = new java.awt.image.BufferedImage(6 + p, 4,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until 4; x <- 0 until 6 + p)
+        img.setRGB(x, y, (x * 40 << 16) | (y * 60 << 8) | p * 50)
+      new javax.imageio.IIOImage(img, null, null)
+    })
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff")
+      .next()
+    val out = new java.io.ByteArrayOutputStream()
+    val stream = javax.imageio.ImageIO.createImageOutputStream(out)
+    writer.setOutput(stream)
+    writer.prepareWriteSequence(null)
+    pages.foreach(writer.writeToSequence(_, null))
+    writer.endWriteSequence(); stream.close(); writer.dispose()
+    val d = Multimodal.decodeImage(1L, "image/tiff", out.toByteArray).get
+    val first = Multimodal.decodeImage(1L, "image/tiff",
+      Multimodal.imageIoBytes("tiff", 6, 4, (x, y) => (x * 40, y * 60, 0)))
+      .get
+    assert(d.width == 6 && d.height == 4)
+    assert(d.n_frames == 1 && d.duration_ms == 0L)
+    assert(d.feature.toSeq == first.feature.toSeq)
   }
 
   test("TIFF decode is bit-identical to PPM decode of the same pixels") {
@@ -170,7 +254,7 @@ class MultimodalSpec extends SparkTestBase {
     // 8-dim features of the raw-pixel PPM decode
     val pix = (x: Int, y: Int) =>
       ((x * 31 + y * 7) % 256, (y * 19 + x) % 256, (x * y + 3) % 256)
-    val tiff = Multimodal.decodeImageIo(1L,
+    val tiff = Multimodal.decodeImage(1L, "image/tiff",
       Multimodal.imageIoBytes("tiff", 11, 6, pix)).get
     val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(11, 6, pix)).get
     assert(tiff.width == 11 && tiff.height == 6 && tiff.kind == "image")
@@ -179,7 +263,7 @@ class MultimodalSpec extends SparkTestBase {
 
   test("JPEG decode: exact dims, bounded codec error on channel means") {
     // uniform color: JPEG quantization is near-lossless on a flat block
-    val flat = Multimodal.decodeImageIo(2L,
+    val flat = Multimodal.decodeImage(2L, "image/jpeg",
       Multimodal.imageIoBytes("jpg", 16, 16, (_, _) => (128, 64, 32))).get
     assert(flat.width == 16 && flat.height == 16 && flat.n_frames == 1)
     assert(math.abs(flat.feature(0) - 128f / 255) < 0.02)
@@ -188,18 +272,129 @@ class MultimodalSpec extends SparkTestBase {
     assert(flat.feature(7) == 1.0f) // aspect ratio survives exactly
     // smooth gradient: means stay within codec tolerance of the source
     val pix = (x: Int, y: Int) => (x * 8, y * 8, (x + y) * 4)
-    val jpg = Multimodal.decodeImageIo(3L,
+    val jpg = Multimodal.decodeImage(3L, "image/jpeg",
       Multimodal.imageIoBytes("jpg", 32, 32, pix)).get
     val ref = Multimodal.decodePpm(3L, Multimodal.ppmBytes(32, 32, pix)).get
     for (d <- 0 until 4) // mean R/G/B + mean luminance
       assert(math.abs(jpg.feature(d) - ref.feature(d)) < 0.05,
         s"dim $d: ${jpg.feature(d)} vs ${ref.feature(d)}")
     // garbage and truncated payloads refuse rather than throw
-    assert(Multimodal.decodeImageIo(4L, Array[Byte](1, 2, 3)).isEmpty)
-    assert(Multimodal.decodeImageIo(5L,
+    assert(Multimodal.decodeImage(4L, "image/jpeg",
+      Array[Byte](1, 2, 3)).isEmpty)
+    assert(Multimodal.decodeImage(5L, "image/jpeg",
       Multimodal.imageIoBytes("jpg", 8, 8, (_, _) => (9, 9, 9)).take(12))
       .isEmpty)
-    assert(Multimodal.decodeImageIo(6L, null).isEmpty)
+    assert(Multimodal.decodeImage(6L, "image/jpeg", null).isEmpty)
+  }
+
+  /** One image row through the batched [[Multimodal.decode]] stage. */
+  private def decodeOne(payload: Array[Byte], mime: String)
+      : Multimodal.DecodedMedia = {
+    val spark2 = spark
+    import spark2.implicits._
+    val df = Seq((1L, "image", payload, ("t", mime, payload.length.toLong)))
+      .toDF("media_id", "kind", "payload", "meta")
+      .withColumn("meta", col("meta").cast(
+        "struct<source:string,mime:string,n_bytes:bigint>"))
+    val out = Multimodal.decode(df).collect()
+    assert(out.length == 1)
+    out.head
+  }
+
+  /** A decoded row's fields, feature included, comparable with `==`. */
+  private def fields(d: Multimodal.DecodedMedia): Seq[Any] =
+    d.productIterator.map {
+      case a: Array[Float] => a.toSeq
+      case v => v
+    }.toSeq
+
+  test("JPEG bytes labelled image/png get a stub row") {
+    val jpeg = Multimodal.imageIoBytes("jpg", 8, 8, (x, y) => (x, y, 9))
+    assert(decodeOne(jpeg, "image/jpeg").width == 8) // real
+    val mislabelled = decodeOne(jpeg, "image/png")
+    assert(fields(mislabelled) ==
+      fields(decodeOne(jpeg, "application/x-unknown"))) // stub
+    assert(mislabelled.width != 8)
+  }
+
+  /** Allocation on the calling thread across `f`. */
+  private def allocated[T](f: => T): (T, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    val out = f
+    (out, mx.getCurrentThreadAllocatedBytes - before)
+  }
+
+  test("image bombs: a 20000x20000 header is refused before allocation") {
+    // JPEG: patch the SOF0 frame header (FF C0, len, precision, h, w)
+    val jpegBomb = Multimodal.imageIoBytes("jpg", 8, 8, (x, y) => (x, y, 9))
+    val sof = jpegBomb.indices.find(i => (jpegBomb(i) & 0xff) == 0xff &&
+      (jpegBomb(i + 1) & 0xff) == 0xc0).get
+    java.nio.ByteBuffer.wrap(jpegBomb, sof + 5, 4)
+      .putShort(20000.toShort).putShort(20000.toShort)
+    // PNG: patch IHDR's width and height and re-seal its CRC
+    val pngBomb = Multimodal.pngBytes(8, 8, (x, y) => (x, y, 9))
+    java.nio.ByteBuffer.wrap(pngBomb, 16, 8).putInt(20000).putInt(20000)
+    val crc = new java.util.zip.CRC32()
+    crc.update(pngBomb, 12, 4 + 13) // chunk type + IHDR data
+    java.nio.ByteBuffer.wrap(pngBomb, 12 + 4 + 13, 4)
+      .putInt(crc.getValue.toInt)
+    for ((mime, bomb) <- Seq("image/jpeg" -> jpegBomb,
+      "image/png" -> pngBomb)) {
+      // warm the reader classes outside the count
+      Multimodal.decodeImage(1L, mime, bomb)
+      val (got, bytes) = allocated(Multimodal.decodeImage(1L, mime, bomb))
+      assert(got.isEmpty, mime)
+      assert(bytes < 64L * 1024 * 1024, s"$mime allocated $bytes bytes")
+    }
+  }
+
+  test("image bombs: deflate-bomb text chunks are never inflated") {
+    // text chunks of deflated zeros after IHDR of a small valid PNG (RGB
+    // and palette): one 64 MiB zTXt, and 400 zTXt / iTXt chunks of
+    // 256 KiB each (the JDK caps ONE chunk's text at 256 K chars, not
+    // their number). The image decodes, the text is skipped
+    val pix = (x: Int, y: Int) => (x * 60, y * 80, 7)
+    val rgb = Multimodal.pngBytes(4, 3, pix)
+    val img = new java.awt.image.BufferedImage(4, 3,
+      java.awt.image.BufferedImage.TYPE_BYTE_INDEXED)
+    for (y <- 0 until 3; x <- 0 until 4) {
+      val (r, g, b) = pix(x, y); img.setRGB(x, y, (r << 16) | (g << 8) | b)
+    }
+    val palOut = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", palOut))
+    def zeros(mib: Int, kib: Int): Array[Byte] = {
+      val zipped = new java.io.ByteArrayOutputStream()
+      val dos = new java.util.zip.DeflaterOutputStream(zipped,
+        new java.util.zip.Deflater(9))
+      for (_ <- 0 until mib) dos.write(new Array[Byte](1 << 20))
+      dos.write(new Array[Byte](kib << 10)); dos.finish()
+      zipped.toByteArray
+    }
+    def chunk(ctype: String, data: Array[Byte]): Array[Byte] = {
+      val tb = ctype.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(data)
+      java.nio.ByteBuffer.allocate(12 + data.length).putInt(data.length)
+        .put(tb).put(data).putInt(crc.getValue.toInt).array()
+    }
+    val key = "Comment".getBytes("US-ASCII")
+    // keyword NUL, then each type's compression header
+    def zTXt(z: Array[Byte]) = chunk("zTXt", key ++ Array[Byte](0, 0) ++ z)
+    def iTXt(z: Array[Byte]) =
+      chunk("iTXt", key ++ Array[Byte](0, 1, 0, 0, 0) ++ z)
+    val capped = zeros(0, 256)
+    val text = Seq(zTXt(zeros(64, 0)),
+      Array.fill(400)(zTXt(capped)).flatten,
+      Array.fill(400)(iTXt(capped)).flatten)
+    for (png <- Seq(rgb, palOut.toByteArray); t <- text) {
+      val bomb = png.take(33) ++ t ++ png.drop(33) // after IHDR
+      val plain = Multimodal.decodeImage(1L, "image/png", png).get
+      val (got, bytes) =
+        allocated(Multimodal.decodeImage(1L, "image/png", bomb))
+      assert(got.map(_.feature.toSeq).contains(plain.feature.toSeq))
+      assert(bytes < 64L * 1024 * 1024, s"allocated $bytes bytes")
+    }
   }
 
   test("JPEG/TIFF payloads decode for real through the batched pipeline") {
@@ -228,7 +423,8 @@ class MultimodalSpec extends SparkTestBase {
       val v = (x * 37 + y * 53) % 200
       (v, (v * 3) % 200, (v * 7) % 200)
     }
-    val gif = Multimodal.decodeGif(1L, Multimodal.gifBytes(20, 17, pix)).get
+    val gif = Multimodal.decodeImage(1L, "image/gif",
+      Multimodal.gifBytes(20, 17, pix)).get
     val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(20, 17, pix)).get
     assert(gif.width == 20 && gif.height == 17 && gif.n_frames == 1)
     assert(gif.feature.toSeq == ppm.feature.toSeq) // exact, not approx
@@ -236,11 +432,12 @@ class MultimodalSpec extends SparkTestBase {
     // 2-color image uses the minimum code size path
     val bw = (x: Int, y: Int) =>
       if ((x + y) % 2 == 0) (0, 0, 0) else (255, 255, 255)
-    val g2 = Multimodal.decodeGif(2L, Multimodal.gifBytes(9, 5, bw)).get
+    val g2 = Multimodal.decodeImage(2L, "image/gif",
+      Multimodal.gifBytes(9, 5, bw)).get
     val p2 = Multimodal.decodePpm(2L, Multimodal.ppmBytes(9, 5, bw)).get
     assert(g2.feature.toSeq == p2.feature.toSeq)
     // single pixel
-    val one = Multimodal.decodeGif(3L,
+    val one = Multimodal.decodeImage(3L, "image/gif",
       Multimodal.gifBytes(1, 1, (_, _) => (10, 20, 30))).get
     assert(one.width == 1 && one.height == 1 && one.feature(7) == 1.0f)
   }
@@ -248,9 +445,9 @@ class MultimodalSpec extends SparkTestBase {
   test("GIF interlaced decode equals the non-interlaced decode") {
     val pix = (x: Int, y: Int) => ((x * 11 + y * 29) % 97, y % 97, x % 97)
     // 13 rows: all four interlace passes are non-empty
-    val plain = Multimodal.decodeGif(1L,
+    val plain = Multimodal.decodeImage(1L, "image/gif",
       Multimodal.gifBytes(8, 13, pix)).get
-    val inter = Multimodal.decodeGif(1L,
+    val inter = Multimodal.decodeImage(1L, "image/gif",
       Multimodal.gifBytes(8, 13, pix, interlaced = true)).get
     assert(inter.feature.toSeq == plain.feature.toSeq)
     assert(inter.width == plain.width && inter.height == plain.height)
@@ -259,47 +456,53 @@ class MultimodalSpec extends SparkTestBase {
   test("GIF animation: frame count and summed delay metadata") {
     val frames = Seq.tabulate(4)(f =>
       (x: Int, y: Int) => ((x + f * 40) % 256, y % 256, f * 60))
-    val d = Multimodal.decodeGif(9L,
+    val d = Multimodal.decodeImage(9L, "image/gif",
       Multimodal.gifAnimBytes(6, 4, frames, delayCs = 12)).get
     assert(d.n_frames == 4)
     assert(d.duration_ms == 4 * 120L) // 12 cs = 120 ms per frame
     // feature comes from the FIRST frame's raster
-    val first = Multimodal.decodeGif(9L,
+    val first = Multimodal.decodeImage(9L, "image/gif",
       Multimodal.gifBytes(6, 4, frames.head)).get
     assert(d.feature.toSeq == first.feature.toSeq)
   }
 
+  test("GIF reports its logical screen, features from the first frame") {
+    // logical screen 12x9 (bytes 6..9, little-endian) around a 7x6 frame
+    val pix = (x: Int, y: Int) => (x * 30, y * 40, 50)
+    val gif = Multimodal.gifBytes(7, 6, pix)
+    gif(6) = 12; gif(7) = 0; gif(8) = 9; gif(9) = 0
+    val d = Multimodal.decodeImage(1L, "image/gif", gif).get
+    assert(d.width == 12 && d.height == 9)
+    val ppm = Multimodal.decodePpm(1L, Multimodal.ppmBytes(7, 6, pix)).get
+    assert(d.feature.toSeq == ppm.feature.toSeq) // aspect 7/6 included
+  }
+
   test("GIF decode refuses corrupt payloads") {
     val good = Multimodal.gifBytes(7, 6, (x, y) => (x * 30, y * 40, 50))
-    assert(Multimodal.decodeGif(1L, good).nonEmpty)
+    assert(Multimodal.decodeImage(1L, "image/gif", good).nonEmpty)
     // truncated LZW data / missing trailer
-    assert(Multimodal.decodeGif(2L, good.dropRight(8)).isEmpty)
+    assert(Multimodal.decodeImage(2L, "image/gif", good.dropRight(8)).isEmpty)
     // bad signature
     val bad = good.clone(); bad(0) = 'X'.toByte
-    assert(Multimodal.decodeGif(3L, bad).isEmpty)
+    assert(Multimodal.decodeImage(3L, "image/gif", bad).isEmpty)
     // garbage and empty
-    assert(Multimodal.decodeGif(4L, Array[Byte](1, 2, 3)).isEmpty)
-    assert(Multimodal.decodeGif(5L, Array.emptyByteArray).isEmpty)
+    assert(Multimodal.decodeImage(4L, "image/gif",
+      Array[Byte](1, 2, 3)).isEmpty)
+    assert(Multimodal.decodeImage(5L, "image/gif",
+      Array.emptyByteArray).isEmpty)
     // an unknown block type terminates cleanly (no throw, no loop);
     // 0x2c never occurs in this fixture's palette bytes, so the first
     // match after the screen descriptor IS the image-descriptor byte
     val ip = good.indexWhere(_ == 0x2c.toByte, 13)
     val unk = good.clone(); unk(ip) = 0x7f.toByte
-    assert(Multimodal.decodeGif(6L, unk).isEmpty)
+    assert(Multimodal.decodeImage(6L, "image/gif", unk).isEmpty)
   }
 
   test("GIF payloads decode for real through the batched pipeline") {
-    val spark2 = spark
-    import spark2.implicits._
     val payload = Multimodal.gifBytes(12, 9,
       (x, y) => ((x * 21) % 256, (y * 17) % 256, 99))
-    val df = Seq((1L, "image", payload, ("t", "image/gif", payload.length.toLong)))
-      .toDF("media_id", "kind", "payload", "meta")
-      .withColumn("meta", col("meta").cast(
-        "struct<source:string,mime:string,n_bytes:bigint>"))
-    val out = Multimodal.decode(df).collect()
-    assert(out.length == 1)
-    assert(out.head.width == 12 && out.head.height == 9) // real, not stub
+    val out = decodeOne(payload, "image/gif")
+    assert(out.width == 12 && out.height == 9) // real, not stub
   }
 
   test("frame sampling fans out only video rows") {
